@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line.
   *
@@ -83,33 +81,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The static codegen cache defaults to 100 entries; a 150-query
-      // registry with round-robin reps generates far more codegen units per
-      // cycle, so every rep would re-run Janino compilation for every query
-      // — a harness artifact, not engine cost. Sized for the registry, as a
-      // long-running SQL server serving this many distinct queries would be.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      // Scan-parallelism FLOOR, derived from the session's core count (so
-      // the driver's lower-core bench keeps a matching floor): the default
-      // split sizing packs a whole compute-heavy corpus into one 128 MB
-      // split — at the derived x10/x100 scale points the documents scan ran
-      // as a SINGLE task while 31 cores idled (guide §6 input split size;
-      // §2.5 input skew). On real 100 TB inputs the natural split count
-      // exceeds any per-node floor, so this is a no-op there; it is NOT a
-      // local[32] constant — it tracks SPARK_GRAFT_CPUS.
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SPLITS", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     def runOnce(name: String, dir: String): (Double, Option[String]) = {
       val t0 = System.nanoTime()
@@ -126,8 +100,7 @@ object Bench {
       ((System.nanoTime() - t0) / 1e9, err)
     }
 
-    // One shared median/percentile definition across Bench, Latency, and
-    // StreamScale (ADVICE r13) — see [[Stats]].
+    // One shared median/percentile definition (ADVICE r13) — see [[Stats]].
     def median(xs: Seq[Double]): Double = Stats.median(xs)
 
     // Optional comma-separated name filter (exact names or prefixes) so a

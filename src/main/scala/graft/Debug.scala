@@ -1,24 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch timing harness (not part of the driver contract). */
+/** Scratch timing harness (not part of the driver contract): times each
+  * named query once into the `noop` sink. `name@dir` runs a query against
+  * an explicit directory (two-dir warm/cold experiments in one JVM); bare
+  * names use `SPARK_GRAFT_SF_DIR`. */
 object Debug {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SPLITS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.cc.logRounds",
-        sys.env.getOrElse("SPARK_GRAFT_CC_LOG", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val names = if (args.nonEmpty) args.toSeq else Seq("d07_minhash_pairs", "d08_simhash", "d09_ngram_jaccard")
-    // `name@dir` runs a query against an explicit directory (two-dir
-    // warm/cold experiments in one JVM); bare names use SPARK_GRAFT_SF_DIR.
     names.foreach { spec =>
       val (n, d) = spec.split("@") match {
         case Array(n0, d0) => (n0, d0)

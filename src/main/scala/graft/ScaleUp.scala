@@ -40,18 +40,6 @@ import org.apache.spark.sql.functions._
   */
 object ScaleUp {
 
-  /** True when `dir` names a scale-up corpus the measurement mains may
-    * self-ensure (write). Path-shape-insensitive: `derived/x100`,
-    * `./derived/x100` and `/root/repo/derived/x100` all qualify — the test
-    * is whether the NORMALIZED path has a `derived` directory segment, so
-    * an absolute spelling of the same corpus doesn't silently skip
-    * [[ensure]] and fail later on a missing dir. Testdata paths
-    * (`/root/testdata/...`) have no such segment and are used as-is. */
-  def isDerivedDir(dir: String): Boolean = {
-    val p = java.nio.file.Paths.get(dir).toAbsolutePath.normalize
-    (0 until p.getNameCount).exists(i => p.getName(i).toString == "derived")
-  }
-
   /** Marker file recording what the derived dir was built from; a content
     * mismatch (different source or factor) forces a rebuild. */
   private def marker(outDir: String) =
@@ -216,16 +204,7 @@ object ScaleUp {
     val srcDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "derived/x10"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .master("local[" + sys.env.getOrElse("SPARK_GRAFT_CPUS", "32") + "]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_SPLITS",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     ensure(spark, srcDir, outDir, factor)
     spark.stop()
   }

@@ -1,9 +1,8 @@
 package graft
 
-/** One shared definition of the order statistics every measurement tool
-  * reports (ADVICE r13: Bench interpolated the median while Latency /
-  * StreamScale used lower-median nearest-rank, so the two attestation
-  * tools printed different medians for the same even-length sample).
+/** One shared definition of the order statistics Bench and BenchAB report
+  * (ADVICE r13: two tools once printed different medians for the same
+  * even-length sample).
   *
   *  - [[median]]: interpolating median (mean of the two middle values for
   *    even n) — Bench's long-standing definition, now the only one.

@@ -3,6 +3,7 @@ package graft.functions.expr
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.PortableHash
@@ -191,10 +192,17 @@ object HashOps {
     * filter formulation generated n² rows and dropped half. GUARDED: ids
     * must fit in an unsigned 32-bit slot or the packing would alias —
     * violations throw rather than corrupt (unpack with an UNSIGNED shift;
-    * ids ≥ 2³¹ set the sign bit of the packed long). */
+    * ids ≥ 2³¹ set the sign bit of the packed long). The pair count is
+    * computed in Long: an array whose n·(n−1)/2 pairs exceed the largest
+    * JVM array (n ≥ 65 537) throws instead of wrapping to a bogus size. */
   def pairPack(ds: ArrayData): ArrayData = {
     val n = ds.numElements()
-    val out = new Array[Long](n * (n - 1) / 2)
+    val pairs = n.toLong * (n - 1) / 2
+    if (pairs > ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH)
+      throw new IllegalArgumentException(
+        s"graft_pair_pack: $n ids give $pairs pairs, more than the largest array " +
+          s"(${ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH} elements)")
+    val out = new Array[Long](pairs.toInt)
     var idx = 0
     var i = 0
     while (i < n) {

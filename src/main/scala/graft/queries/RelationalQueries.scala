@@ -516,34 +516,22 @@ object RelationalQueries {
         ON c.user_id = p.user_id AND p.ts <= c.ts
       ORDER BY c.user_id, c.event_id"""))
 
-  /** q26's frame with the pipeline cut selectable ("scan" = the interval
-    * projection only, "join" = the bucketed range join without the rollup,
-    * "agg" = + the per-month count, "full" = the registered shape with the
-    * trailing orderBy) — [[graft.SlopeAttribution]] times the cuts to
-    * attribute the x100 slope (VERDICT r15 next #3: 18.2×, the last >15×
-    * cell without a measured cause). */
-  private[graft] def q26Frame(s: SparkSession, dir: String,
-      cut: String = "full"): DataFrame = {
-    val iv = t(s, dir, "lineitem").select(
-      to_date(col("l_shipdate")).as("sd"),
-      date_add(to_date(col("l_shipdate")), (col("l_orderkey") % 45).cast("int")).as("ed"))
-    if (cut == "scan") return iv
-    val probes = iv.select(trunc(col("sd"), "month").as("d")).distinct()
-    val joined = graft.operators.RangeJoin.pointInInterval(
-      probes, "d", iv, "sd", "ed")
-    if (cut == "join") return joined
-    val agg = joined.groupBy(col("d"))
-      .agg(count(lit(1)).as("n_open_intervals"))
-    if (cut == "agg") agg else agg.orderBy(col("d"))
-  }
-
   /** Range join via [[graft.operators.RangeJoin]]: shipment intervals
     * (shipdate + up-to-45-day span) probed with distinct month starts.
     * The oracle is the plain theta join — bucketing must be invisible. */
   val q26RangeJoin: GraftQuery = GraftQuery(
     "q26_range_join",
     "bucketed point-in-interval range join (month buckets + exact filter)",
-    (s, dir) => q26Frame(s, dir),
+    (s, dir) => {
+      val iv = t(s, dir, "lineitem").select(
+        to_date(col("l_shipdate")).as("sd"),
+        date_add(to_date(col("l_shipdate")), (col("l_orderkey") % 45).cast("int")).as("ed"))
+      val probes = iv.select(trunc(col("sd"), "month").as("d")).distinct()
+      graft.operators.RangeJoin.pointInInterval(probes, "d", iv, "sd", "ed")
+        .groupBy(col("d"))
+        .agg(count(lit(1)).as("n_open_intervals"))
+        .orderBy(col("d"))
+    },
     Some("""WITH iv AS (
         SELECT CAST(l_shipdate AS DATE) AS sd,
           CAST(l_shipdate AS DATE) + CAST(l_orderkey % 45 AS INT) AS ed
@@ -964,23 +952,15 @@ object RelationalQueries {
     * a non-unique ORDER BY would be engine-nondeterministic). Scale: one
     * shuffle on the partition key; all five ranks share a single window
     * sort. */
-  /** q40's frame with the pipeline cut selectable ("scan" = projected input
-    * only, "window" = ranks without the trailing global re-sort, "full" =
-    * the registered shape) — [[graft.SlopeAttribution]] times the cuts to
-    * attribute the x100 slope between the window sort (whose parallelism
-    * the 5-value partition key caps) and the final orderBy (whose range
-    * partitioner re-samples the windowed child). */
   /** The previous q40 run's cached range-partitioned frame — rotated (and
     * unpersisted) on each new run so repeated bench reps hold at most one
     * live cache entry. */
   private val q40LastCached =
     new java.util.concurrent.atomic.AtomicReference[DataFrame]()
 
-  private[graft] def q40Frame(s: SparkSession, dir: String,
-      cut: String = "full"): DataFrame = {
+  private[graft] def q40Frame(s: SparkSession, dir: String): DataFrame = {
     val base = t(s, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-    if (cut == "scan") return base
     // TWO-PHASE rank family (optimization r17, guide §2.5): the direct
     // `Window.partitionBy(o_orderpriority)` puts each priority's whole
     // row set in ONE task — 5-way parallelism at every scale, the one
@@ -1065,8 +1045,7 @@ object RelationalQueries {
     // otherwise re-run the row_number/join path a second time (the cache
     // below `marked` only shares the range-partitioned input, not the
     // ranked output).
-    if (cut == "window") ranked
-    else GraftQuery.sortedOnce(ranked, col("o_orderkey"))
+    GraftQuery.sortedOnce(ranked, col("o_orderkey"))
   }
 
   /** q40's ORIGINAL direct-window formulation, kept as the spec reference:

@@ -479,13 +479,8 @@ object SimilarityQueries {
     * hash (shifted to [1, 255] so the fold never sees a negative) because
     * the oracle compare is scalar-columnar; the fold is the same
     * [[PortableHash.foldHash]] contract d11/d13 use. */
-  /** e03's frame, `sorted = false` dropping the trailing global sort —
-    * [[graft.SlopeAttribution]] times both to attribute the x100 slope's
-    * sort share (range partitioning SAMPLES the child, so the orderBy costs
-    * a partial second evaluation of the quantization expressions on top of
-    * the sort itself). The registered query always runs sorted. */
-  private[graft] def e03Frame(s: org.apache.spark.sql.SparkSession, dir: String,
-      sorted: Boolean = true): org.apache.spark.sql.DataFrame = {
+  private def e03Frame(s: org.apache.spark.sql.SparkSession,
+      dir: String): org.apache.spark.sql.DataFrame = {
     val ve = transform(col("embedding"), x => x.cast("double"))
     val amax = array_max(transform(col("ve"), x => abs(x)))
     val scale = when(amax > 0.0, lit(127.0) / amax).otherwise(lit(0.0))
@@ -507,7 +502,7 @@ object SimilarityQueries {
     // sortedOnce: the quantization expressions are the whole cost and the
     // child is shuffle-free, so a bare orderBy evaluates them twice (range
     // sampling + output) — measured 5.1 s of the 7.7 s x100 cell.
-    if (sorted) GraftQuery.sortedOnce(body, col("vec_id")) else body
+    GraftQuery.sortedOnce(body, col("vec_id"))
   }
 
   val e03Int8Quantize: GraftQuery = GraftQuery(
@@ -1163,7 +1158,6 @@ object SimilarityQueries {
   private[queries] def listPairs(s: org.apache.spark.sql.SparkSession, dir: String,
                                  trained: Boolean = true,
                                  maxId: Long = Long.MaxValue) = {
-    val tPhase0 = System.nanoTime()
     val prepared = Tables.load(s, dir, "embeddings")
       .filter(col("vec_id") < maxId)
       .select(col("vec_id"),
@@ -1178,8 +1172,6 @@ object SimilarityQueries {
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1)
-    BuildPhases.record("prepare", tPhase0)
-    val tPhase1 = System.nanoTime()
     // Lloyd-train the coarse codebook (VERDICT r9 next #6 — e05's
     // integer-exact discipline): assignments run over the int8 CODES so the
     // per-(list, dim) centroid sums are exact int64 arithmetic —
@@ -1226,7 +1218,6 @@ object SimilarityQueries {
       }
       cb
     }
-    BuildPhases.record("train", tPhase1)
     cbCache.put((dir, trained, maxId), codebook)
     // Broadcast decision for the probe join below, made here because the
     // PROBE side's parallelism depends on it: a broadcast join inherits its
@@ -1297,8 +1288,8 @@ object SimilarityQueries {
     // The canonical pair table feeds the top-K graph, the hop expansion
     // (twice, through the self-join), and the τ-filtered edge part — FOUR
     // consuming branches of one fused write. The repeated subtree is
-    // textually identical, but measured at x10/x100 (round 17,
-    // BuildExplain census) NEITHER ReuseExchange nor AQE's stage cache
+    // textually identical, but an exchange census of the executed plan at
+    // x10/x100 (round 17) showed NEITHER ReuseExchange nor AQE's stage cache
     // shares it: g3∪hops executed ≈ 3× pairs0's wall, the full union ≈ 4×
     // — the probe join, router, and dedup re-ran per branch. So the build
     // MATERIALIZES the canonical table explicitly (MEMORY_AND_DISK — at
@@ -1599,11 +1590,8 @@ object SimilarityQueries {
     * dropped by the build's caller once its one write has committed. The
     * long-lived `prepared` vector cache is deliberately NOT here: it
     * predates round 17 and other e-family plans may resolve against it
-    * through the CacheManager. The
-    * queue (rather than scoped vals) keeps [[listPairs]]'s signature
-    * stable across its three executors (graphTables, timeBuildCuts,
-    * explainBuild); draining a cache an in-flight concurrent build still
-    * holds merely recomputes it — correctness is unaffected. */
+    * through the CacheManager. Draining a cache an in-flight concurrent
+    * build still holds merely recomputes it — correctness is unaffected. */
   private val buildCaches =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
 
@@ -1644,12 +1632,10 @@ object SimilarityQueries {
     val base = graphDirs.computeIfAbsent((dir, trained, maxId), { _ =>
       val out = graft.streaming.StreamHarness.tempDir("cgraph")
       val (pairs0, g3, hopsSym, capped, asg) = listPairs(s, dir, trained, maxId)
-      val tPhase2 = System.nanoTime()
       try withObjHashRoom(s) {
         graphUnion(pairs0, g3, hopsSym, capped, asg)
           .write.mode("overwrite").partitionBy("part").parquet(out)
       } finally releaseBuildCaches()
-      BuildPhases.record("assign_write", tPhase2)
       out
     })
     val t = s.read.parquet(base)
@@ -1661,9 +1647,7 @@ object SimilarityQueries {
         col("cosine").as("ccos")))
   }
 
-  /** The build's one fused output plan, shared by [[graphTables]] and the
-    * [[timeBuildCuts]] instrumentation so the timed cuts execute exactly
-    * the shipped write's shape. */
+  /** The build's one fused output plan, written once by [[graphTables]]. */
   private def graphUnion(pairs0: org.apache.spark.sql.DataFrame,
       g3: org.apache.spark.sql.DataFrame, hopsSym: org.apache.spark.sql.DataFrame,
       capped: org.apache.spark.sql.DataFrame, asg: org.apache.spark.sql.DataFrame) =
@@ -1679,71 +1663,6 @@ object SimilarityQueries {
       // list, cosine to that centroid) — e15's keep-rule input.
       .union(asg.select(col("vec_id"), col("list").as("nid"),
         col("ccos").as("cosine")).withColumn("part", lit("asg")))
-
-  /** MARGINAL cuts of the fused `assign_write` stage (VERDICT r15 next #2;
-    * r17 semantics): after one untimed prepare+train, the cuts execute in
-    * the shipped order SHARING the build's materialized intermediates
-    * (`canon`/`g3` — released only after the last cut), so each cut times
-    * the marginal cost of its stage exactly as the one shipped write pays
-    * it:
-    *
-    *  - `cand_join`  — routing + capped probe join + canonical dedup +
-    *    cache write + symmetrize (pairs0, COLD) into the noop sink;
-    *  - `nn_descent` — the bounded top-K aggregation + hop expansion + hop
-    *    scoring (g3 ∪ hops) over the WARM canon cache;
-    *  - `full_write` — the shipped five-part union written to scratch
-    *    parquet, warm canon+g3 (its marginal: the τ-part + the write).
-    *
-    * The three marginals must sum to ≈ the fused stage's wall —
-    * [[graft.IndexBuildTime]] gates each rep on that consistency. */
-  /** Plan-dump hook for [[BuildExplain]]: the fused build union's physical
-    * plan, plus a one-line census of Exchange vs ReusedExchange nodes. */
-  private[queries] def explainBuild(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = withObjHashRoom(s) {
-    val (pairs0, g3, hopsSym, capped, asg) = listPairs(s, dir)
-    def census(tag: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      // AFTER execution the AdaptiveSparkPlan prints its FINAL plan —
-      // runtime stage reuse is visible there, not in the static explain.
-      val plan = df.queryExecution.executedPlan.toString
-      def count(p: String) = p.r.findAllIn(plan).size
-      println(s"[buildexplain] $tag sec=${"%.1f".format(sec)} " +
-        s"exchanges=${count("Exchange ")} reused=${count("ReusedExchange")} " +
-        s"objhashagg=${count("ObjectHashAggregate")} " +
-        s"sortagg=${count("SortAggregate")} scans=${count("Scan parquet")} " +
-        s"final=${count("isFinalPlan=true")}")
-    }
-    census("pairs0", pairs0)
-    census("g3", g3)
-    census("g3+hops", g3.union(hopsSym))
-    census("full", graphUnion(pairs0, g3, hopsSym, capped, asg))
-    graphUnion(pairs0, g3, hopsSym, capped, asg).explain("formatted")
-    releaseBuildCaches()
-  }
-
-  private[graft] def timeBuildCuts(s: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[(String, Double)] = withObjHashRoom(s) {
-    try {
-      val (pairs0, g3, hopsSym, capped, asg) = listPairs(s, dir)
-      def t(act: => Unit): Double = {
-        val t0 = System.nanoTime(); act; (System.nanoTime() - t0) / 1e9
-      }
-      def noop(df: org.apache.spark.sql.DataFrame): Unit =
-        df.write.format("noop").mode("overwrite").save()
-      val out = graft.streaming.StreamHarness.tempDir("cutw")
-      // The cuts share the build's materialized intermediates exactly as
-      // the shipped one-write job does: cand_join pays the canon cache
-      // write, the later cuts read it — the deltas still attribute the
-      // stage because that IS the shipped execution order.
-      Seq(
-        "cand_join" -> t(noop(pairs0)),
-        "nn_descent" -> t(noop(g3.union(hopsSym))),
-        "full_write" -> t(graphUnion(pairs0, g3, hopsSym, capped, asg)
-          .write.mode("overwrite").partitionBy("part").parquet(out)))
-    } finally releaseBuildCaches()
-  }
 
   /** Materialized CLUSTER LABELS over the graph index, built once per
     * (directory, edge set) and shared by e08/e15/e16 — cluster assignment
@@ -1776,77 +1695,6 @@ object SimilarityQueries {
       out
     })
     s.read.parquet(path)
-  }
-
-  /** Cold index-build timing hook for [[graft.IndexBuildTime]] (VERDICT r13
-    * next #6): drops the memo entry and rebuilds the materialized graph
-    * tables from scratch — Lloyd training, two-level coarse assignment, the
-    * capped probe join, the parquet write — returning the build wall-time.
-    * This is where e07's O(n^1.25) coarse-assignment term actually lives
-    * (the bench pre-builds it untimed so query cells time the probe path). */
-  private[graft] def timeGraphBuild(s: org.apache.spark.sql.SparkSession,
-      dir: String): Double = {
-    graphDirs.remove((dir, true, Long.MaxValue))
-    val t0 = System.nanoTime()
-    graphTables(s, dir, trained = true)
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** Per-phase wall times of the MOST RECENT [[listPairs]]/[[graphTables]]
-    * build in this JVM (VERDICT r14 next #3 — `index_build_x100.json` timed
-    * the whole build, diluting the int8-router gain with Lloyd training and
-    * parquet writes). Three phases cover the build exactly:
-    * `prepare` (embedding scan + norm + persist + seed collect), `train`
-    * (the integer-exact Lloyd loop, [[NIter]] assignment rounds), and
-    * `assign_write` (the one fused job: corpus routing, capped probe join,
-    * NN-descent hop scoring, partitioned parquet write — Spark fuses these
-    * lazily, so they are ONE action; [[timeAssignLeg]] isolates the routing
-    * stage out of it). Read by [[graft.IndexBuildTime]] right after its own
-    * build — last build wins, which is that main's own. */
-  private[graft] object BuildPhases {
-    private val m = new java.util.concurrent.ConcurrentHashMap[String, Double]()
-    private[queries] def record(phase: String, t0Nanos: Long): Unit =
-      m.put(phase, (System.nanoTime() - t0Nanos) / 1e9)
-    def snapshot: Map[String, Double] = {
-      import scala.jdk.CollectionConverters._
-      m.asScala.toMap
-    }
-  }
-
-  /** Isolated corpus-assignment timing (VERDICT r14 next #3): forces JUST
-    * the two-level router over every corpus vector — scan → cast → route →
-    * noop sink, one map-side stage, no shuffle, no parquet write — so the
-    * artifact can state what the routed assignment itself costs.
-    * `leg` selects the stage under test against the SAME trained codebook
-    * (from [[cbCache]], so [[graphTables]] must have built first):
-    *  - "scan"  — scan + cast + norm only (the shared input cost floor);
-    *  - "float" — [[cbRank2]], double arithmetic over the float codebook;
-    *  - "int8"  — [[cbRank2Q]], the shipped code-space router.
-    * float−scan vs int8−scan is the router kernels' isolated A/B. */
-  private[graft] def timeAssignLeg(s: org.apache.spark.sql.SparkSession,
-      dir: String, leg: String): Double = {
-    val cb = cbCache.get((dir, true, Long.MaxValue))
-    require(cb != null, s"graph index for $dir not built yet")
-    val prepared = Tables.load(s, dir, "embeddings")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("ve"))
-      .withColumn("nrm", sqrt(call_function("graft_dot", col("ve"), col("ve"))))
-    val probed = leg match {
-      // The scan leg keeps nrm alive through a filter so the float leg's
-      // input cost (scan + cast + norm) is what it measures — selecting
-      // ve alone would let Catalyst prune the norm away.
-      case "scan" => prepared.filter(col("nrm") >= 0.0).select(col("vec_id"))
-      case "float" => prepared.withColumn("list",
-          element_at(cbRank2(s, "tmassignf", cb, col("ve"), col("nrm")), 1))
-        .select(col("list"))
-      case "int8" => prepared.withColumn("list",
-          element_at(cbRank2Q(s, "tmassignq", cb, col("ve")), 1))
-        .select(col("list"))
-      case other => sys.error(s"unknown assignment leg $other")
-    }
-    val t0 = System.nanoTime()
-    probed.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
   }
 
   /** e07 — corpus-wide k-NN GRAPH (neighbors for EVERY vector, not just a

@@ -188,7 +188,7 @@ object StreamingQueries {
       // are stateless append pipelines — no watermark, no cross-batch
       // state, results batch-boundary-independent — so the 2-chunk split
       // only doubled their fixed per-trigger cost (incremental planning +
-      // commit, ~250 ms/trigger measured by StreamPhases). Stateful and
+      // commit, ~250 ms/trigger measured per phase). Stateful and
       // cross-batch queries keep the 2-chunk feed; the test suite drives
       // deeper batch counts for all of them.
       "fitbit1" -> ((s, dir) =>
@@ -310,7 +310,7 @@ object StreamingQueries {
     (s, dir) => {
       val qn = "s01_sink_" + UUID.randomUUID().toString.replace("-", "")
       val src = fileSource("s01")
-      StreamHarness.drainPublish(s, src, feedPublishers(s, dir, src)) { raw =>
+      StreamHarness.drain(s, src, feedPublishers(s, dir, src)) { raw =>
         warningAlerts(parseFitbit(raw))
           .select(col("user_id"), col("age"), col("pulse"), col("warning"),
             col("machine_ts"))
@@ -339,7 +339,7 @@ object StreamingQueries {
       val sink = new UpsertSink(StreamHarness.tempDir("s02-loc"),
         Seq("user_id"), Seq("ver", "long", "lat"))
       val src = fileSource("s02")
-      StreamHarness.drainPublish(s, src, feedPublishers(s, dir, src)) { raw =>
+      StreamHarness.drain(s, src, feedPublishers(s, dir, src)) { raw =>
         locations(parseFitbit(raw))
           .writeStream
           .option("checkpointLocation", StreamHarness.checkpointDir("s02"))
@@ -367,7 +367,7 @@ object StreamingQueries {
     (s, dir) => {
       val out = StreamHarness.tempDir("s03-out")
       val src = fileSource("s03")
-      StreamHarness.drainPublish(s, src, feedPublishers(s, dir, src, "fitbit1")) { raw =>
+      StreamHarness.drain(s, src, feedPublishers(s, dir, src, "fitbit1")) { raw =>
         warningAlerts(parseFitbit(raw))
           .writeStream
           .option("checkpointLocation", StreamHarness.checkpointDir("s03"))
@@ -401,7 +401,7 @@ object StreamingQueries {
     (s, dir) => {
       val out = StreamHarness.tempDir("s04-out")
       val src = fileSource("s04")
-      StreamHarness.drainPublish(s, src, feedPublishers(s, dir, src, "fitbit1")) { raw =>
+      StreamHarness.drain(s, src, feedPublishers(s, dir, src, "fitbit1")) { raw =>
         history(parseFitbit(raw))
           .writeStream.format("parquet")
           .option("path", out)
@@ -445,7 +445,7 @@ object StreamingQueries {
         s"fitbit,2100-01-01 0$i:00:00,0,0,0,1.0,1.0,20,click,4102444800000")
         .toDF("value")
       val src = fileSource("s05")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src) :+ (() => src.append(sentinel))) { raw =>
         parseFitbit(raw)
           .select(try_to_timestamp(col("ts_str"),
@@ -507,7 +507,7 @@ object StreamingQueries {
       val sink = new UpsertSink(StreamHarness.tempDir("s06-prof"),
         Seq("user_id"), Seq("ver"))
       val src = fileSource("s06")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src, "s06-profile")) { raw =>
         parseNewUser(raw)
           .filter(col("_corrupt").isNull)
@@ -550,7 +550,7 @@ object StreamingQueries {
       val sink = new UpsertSink(StreamHarness.tempDir("s07-sales"),
         Seq("date"), Seq("count"))
       val src = fileSource("s07")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src, "sales")) { raw =>
         parseSales(raw)
           .filter(col("_corrupt").isNull).select(col("date"), col("count"))
@@ -574,7 +574,7 @@ object StreamingQueries {
     (s, dir) => {
       val qn = "s08_sink_" + UUID.randomUUID().toString.replace("-", "")
       val src = fileSource("s08")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src, "fitbit-dup")) { raw =>
         parseFitbit(raw)
           .select(col("user_id"), col("machine_ts"), col("long"))
@@ -602,7 +602,7 @@ object StreamingQueries {
       import s.implicits._
       val qn = "s09_sink_" + UUID.randomUUID().toString.replace("-", "")
       val src = fileSource("s09")
-      StreamHarness.drainPublish(s, src, feedPublishers(s, dir, src)) { raw =>
+      StreamHarness.drain(s, src, feedPublishers(s, dir, src)) { raw =>
         warningAlerts(parseFitbit(raw))
           .select(col("user_id")).as[String]
           .groupByKey(identity)
@@ -642,9 +642,9 @@ object StreamingQueries {
       val qn = "s10_sink_" + UUID.randomUUID().toString.replace("-", "")
       val srcA = fileSource("s10a")
       val srcB = fileSource("s10b")
-      StreamHarness.drain2Publish(s,
-        srcA, feedPublishers(s, dir, srcA),
-        srcB, feedPublishers(s, dir, srcB)) { (rawA, rawB) =>
+      StreamHarness.drain(s, Seq(
+        srcA -> feedPublishers(s, dir, srcA),
+        srcB -> feedPublishers(s, dir, srcB))) { case Seq(rawA, rawB) =>
         val alerts = warningAlerts(parseFitbit(rawA))
           .select(col("user_id"), col("machine_ts").cast("long").as("a_ms"),
             timestamp_millis(col("machine_ts").cast("long")).as("a_ts"),
@@ -698,7 +698,7 @@ object StreamingQueries {
     (s, dir) => {
       val topic = StreamHarness.tempDir("s11-topic")
       val src = fileSource("s11")
-      StreamHarness.drainPublish(s, src, feedPublishers(s, dir, src, "fitbit1")) { raw =>
+      StreamHarness.drain(s, src, feedPublishers(s, dir, src, "fitbit1")) { raw =>
         warningAlerts(parseFitbit(raw))
           .select(renderTuple(col("user_id"), col("warning"),
             col("ts_str")).as("payload"))
@@ -753,7 +753,7 @@ object StreamingQueries {
       val sink = new UpsertSink(StreamHarness.tempDir("s13-sales"),
         Seq("date"), Seq("seq"))
       val src = fileSource("s13")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src, "salesv2")) { raw =>
         parseSalesV2(raw)
           .filter(col("_corrupt").isNull)
@@ -787,7 +787,7 @@ object StreamingQueries {
     (s, dir) => {
       val qn = "s14_sink_" + UUID.randomUUID().toString.replace("-", "")
       val src = fileSource("s14")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src, "fitbit-dup")) { raw =>
         parseFitbit(raw)
           .select(col("user_id"), col("machine_ts"), col("long"),
@@ -826,7 +826,7 @@ object StreamingQueries {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       try {
         val src = fileSource("s15")
-        StreamHarness.drainPublish(s, src, feedPublishers(s, dir, src)) { raw =>
+        StreamHarness.drain(s, src, feedPublishers(s, dir, src)) { raw =>
           warningAlerts(parseFitbit(raw))
             .select(col("user_id")).as[String]
             .groupByKey(identity)
@@ -868,7 +868,7 @@ object StreamingQueries {
         s"fitbit,2100-01-01 0$i:00:00,0,0,0,1.0,1.0,20,click,4102444800000")
         .toDF("value")
       val src = fileSource("s16")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src) :+ (() => src.append(sentinel))) { raw =>
         parseFitbit(raw)
           .select(col("user_id"),
@@ -931,7 +931,7 @@ object StreamingQueries {
         s"fitbit,2100-01-01 0$i:00:00,0,0,0,1.0,1.0,20,click,4102444800000")
         .toDF("value")
       val src = fileSource("s17")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src) :+ (() => src.append(sentinel))) { raw =>
         parseFitbit(raw)
           .select(try_to_timestamp(col("ts_str"),
@@ -981,9 +981,10 @@ object StreamingQueries {
         .toDF("value")
       val srcA = fileSource("s18a")
       val srcB = fileSource("s18b")
-      StreamHarness.drain2Publish(s,
-        srcA, feedPublishers(s, dir, srcA) :+ (() => srcA.append(sentinel)),
-        srcB, feedPublishers(s, dir, srcB) :+ (() => srcB.append(sentinel))) { (rawA, rawB) =>
+      StreamHarness.drain(s, Seq(
+        srcA -> (feedPublishers(s, dir, srcA) :+ (() => srcA.append(sentinel))),
+        srcB -> (feedPublishers(s, dir, srcB) :+ (() => srcB.append(sentinel))))) {
+        case Seq(rawA, rawB) =>
         val alerts = warningAlerts(parseFitbit(rawA))
           .select(col("user_id"), col("machine_ts").cast("long").as("a_ms"),
             timestamp_millis(col("machine_ts").cast("long")).as("a_ts"),
@@ -1092,7 +1093,7 @@ object StreamingQueries {
       val outA = StreamHarness.tempDir("s20-hist")
       val outB = StreamHarness.tempDir("s20-topic")
       val src = fileSource("s20")
-      StreamHarness.drainPublish(s, src, feedPublishers(s, dir, src)) { raw =>
+      StreamHarness.drain(s, src, feedPublishers(s, dir, src)) { raw =>
         warningAlerts(parseFitbit(raw))
           .select(col("user_id"), col("age"), col("pulse"), col("warning"),
             col("machine_ts"))
@@ -1137,7 +1138,7 @@ object StreamingQueries {
       val sink = new graft.streaming.Scd2Sink(StreamHarness.tempDir("s21-scd2"),
         Seq("user_id"), "seq", Seq("v"))
       val src = fileSource("s21")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src, "scd")) { raw =>
         parseScd(raw)
           .filter(col("_corrupt").isNull)
@@ -1185,7 +1186,7 @@ object StreamingQueries {
       val sink = new graft.streaming.Scd2Sink(StreamHarness.tempDir("s22-scd2"),
         Seq("user_id"), "seq", Seq("v"))
       val src = fileSource("s22")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src, "scd-click")) { raw =>
         parseScd(raw) // tag demux: clickq lines never reach the register
           .filter(col("_corrupt").isNull)
@@ -1263,7 +1264,7 @@ object StreamingQueries {
     (s, dir) => {
       val out = StreamHarness.tempDir("s23-out")
       val src = fileSource("s23")
-      StreamHarness.drainPublish(s, src,
+      StreamHarness.drain(s, src,
         feedPublishers(s, dir, src, "aof")) { raw =>
         raw.filter(Wire.tagOf(col("value")) === "aof")
           .select(Wire.parseCsv(col("value"), AsofWireSchema).as("r"))
@@ -1361,7 +1362,7 @@ object StreamingQueries {
       import graft.functions.PortableHash.P
       val qn = "s24_sink_" + UUID.randomUUID().toString.replace("-", "")
       val src = fileSource("s24")
-      StreamHarness.drainPublish(s, src, feedPublishers(s, dir, src)) { raw =>
+      StreamHarness.drain(s, src, feedPublishers(s, dir, src)) { raw =>
         parseFitbit(raw)
           .select((col("user_id").cast("long") % 5).as("cohort"),
             call_function("graft_string_hash", col("machine_ts")).as("h"))
@@ -1524,17 +1525,7 @@ object StreamingQueries {
     * registry entry: it measures the per-batch cost of a pipeline s01
     * already proves correct, so it has no oracle shape. */
   def latencyProbe(s: SparkSession, dir: String,
-                   batches: Int, rowsPerBatch: Int): Seq[Long] =
-    latencyProbeProgress(s, dir, batches, rowsPerBatch)
-      .map(_.durationMs.get("triggerExecution").longValue())
-
-  /** [[latencyProbe]] returning the full per-batch progress objects, so the
-    * scale tools can break a tail batch into its phases (`durationMs`:
-    * addBatch / walCommit / getBatch / …) instead of guessing what the p99
-    * straggler is (VERDICT r13 next #4). */
-  def latencyProbeProgress(s: SparkSession, dir: String,
-      batches: Int, rowsPerBatch: Int)
-    : Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
+                   batches: Int, rowsPerBatch: Int): Seq[Long] = {
     val qn = "lat_sink_" + UUID.randomUUID().toString.replace("-", "")
     val ev = Tables.load(s, dir, "events")
     // The probe must actually FEED rowsPerBatch rows per batch: the r12
@@ -1581,8 +1572,9 @@ object StreamingQueries {
       // latency). The warmup uses its own query + checkpoint; the measured
       // drain below then starts codegen-warm, exactly like a query that has
       // been running longer than one trigger.
-      StreamHarness.drain(s, fileSource("latw"),
-        Seq(feed.limit(100).select(Wire.fitbitLine.as("value"))))(
+      val warm = fileSource("latw")
+      StreamHarness.drain(s, warm, StreamHarness.appends(warm,
+        Seq(feed.limit(100).select(Wire.fitbitLine.as("value")))))(
         pipeline("latw_" + UUID.randomUUID().toString.replace("-", "")))
       // Feed each batch as MULTIPLE part-files at high rates (VERDICT r13
       // next #4): `feed` comes off an orderBy().limit() — a single
@@ -1597,7 +1589,9 @@ object StreamingQueries {
       val chunks = StreamHarness.rangeChunks(feed, "event_id", batches)
         .map(c => if (feedFiles == 1) c.select(Wire.fitbitLine.as("value"))
                   else c.select(Wire.fitbitLine.as("value")).repartition(feedFiles))
-      StreamHarness.drainProgressed(s, fileSource("lat"), chunks)(pipeline(qn))
+      val src = fileSource("lat")
+      StreamHarness.drain(s, src, StreamHarness.appends(src, chunks))(pipeline(qn))
+        .map(_.durationMs.get("triggerExecution").longValue())
     } finally feed.unpersist()
   }
 
@@ -1668,7 +1662,7 @@ object StreamingQueries {
     (s, dir) => {
       val qn = "s26_sink_" + UUID.randomUUID().toString.replace("-", "")
       val src = fileSource("s26")
-      StreamHarness.drainPublish(s, src, docsFeedPublishers(s, dir, src)) { raw =>
+      StreamHarness.drain(s, src, docsFeedPublishers(s, dir, src)) { raw =>
         s26Admission(raw)
           .writeStream.format("memory").queryName(qn)
           .option("checkpointLocation", StreamHarness.checkpointDir("s26"))
@@ -1778,7 +1772,7 @@ object StreamingQueries {
     (s, dir) => {
       val qn = "s27_sink_" + UUID.randomUUID().toString.replace("-", "")
       val src = fileSource("s27")
-      StreamHarness.drainPublish(s, src, docsFeedPublishers(s, dir, src)) { raw =>
+      StreamHarness.drain(s, src, docsFeedPublishers(s, dir, src)) { raw =>
         s27Segments(raw)
           .writeStream.format("memory").queryName(qn)
           .option("checkpointLocation", StreamHarness.checkpointDir("s27"))
@@ -2093,11 +2087,7 @@ object StreamingQueries {
     * surface; VERDICT r13 next #3).
     *
     * `chunksN` controls the increment's micro-batch split (rows/batch =
-    * increment ÷ chunksN) and `phaseSink`, when set, receives
-    * (batchId, phase, seconds) for each batch's compact / route_admit /
-    * edges / post_probe / monitor / total sections — both exist for
-    * [[graft.StreamMaintainScale]]'s drain-cost measurement (VERDICT r14
-    * next #2) and are no-ops for every registered query. `compactEvery`
+    * increment ÷ chunksN); the replay spec varies it. `compactEvery`
     * bounds how many committed increment parts (and runs per level)
     * accumulate before the standing tables fold into a tiered snapshot run
     * ([[maybeCompactParts]], VERDICT r15 next #1, tiered per r16 next #5). */
@@ -2107,7 +2097,6 @@ object StreamingQueries {
       monitor: Boolean = false,
       drive: Option[S28Drive] = None,
       chunksN: Int = Chunks,
-      phaseSink: Option[(Long, String, Double) => Unit] = None,
       compactEvery: Int = CompactEvery)
     : S28Tables = {
       import SimilarityQueries.{GraphNProbe, e13BatchSize}
@@ -2169,7 +2158,8 @@ object StreamingQueries {
         // exists if both starts share the checkpoint.
         val ckpt = StreamHarness.checkpointDir("s28")
         val runDrive: S28Drive = drive.getOrElse(
-          (src, cs, _, start) => StreamHarness.drain(s, src, cs)(start))
+          (src, cs, _, start) =>
+            StreamHarness.drain(s, src, StreamHarness.appends(src, cs))(start))
         runDrive(fileSource("s28"), chunks, ckpt, { raw =>
           raw.writeStream
             .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -2178,18 +2168,6 @@ object StreamingQueries {
               // outer session.
               val bs = batch.sparkSession
               if (!batch.isEmpty) {
-              // Optional per-phase wall clock (SPARK_GRAFT maintenance
-              // scale probe — VERDICT r14 next #2): a no-op None in every
-              // registered query; [[graft.StreamMaintainScale]] passes a
-              // collector. Phases cut at the body's natural action
-              // boundaries, so each is attributable to one job group.
-              val tb0 = System.nanoTime()
-              var tMark = tb0
-              def mark(phase: String): Unit = {
-                val t1 = System.nanoTime()
-                phaseSink.foreach(f => f(id, phase, (t1 - tMark) / 1e9))
-                tMark = t1
-              }
               // Standing-table compaction (VERDICT r15 next #1): before any
               // read, fold accumulated increments into tiered snapshot
               // runs so this batch — and every later one — reads the seed
@@ -2201,7 +2179,6 @@ object StreamingQueries {
               // compaction-boundary kill.
               Seq(postDir, probeDir, edgeDir).foreach(d =>
                 maybeCompactParts(bs, d, id, compactEvery))
-              mark("compact")
               val parts = split(col("value"), "\\|", 2)
               val arr = batch.select(
                 parts.getItem(0).cast("long").as("vec_id"),
@@ -2237,7 +2214,6 @@ object StreamingQueries {
                 .select(col("list"), col("vec_id").as("nid"),
                   col("ve").as("nve"), col("nrm").as("nnrm"))
                 .localCheckpoint(true)
-              mark("route_admit")
               val probes = arr.select(col("vec_id"), col("ve"), col("nrm"),
                 explode(slice(col("rl"), 1, GraphNProbe)).as("list"))
               // e1: this batch's probers vs base ∪ admitted-so-far targets.
@@ -2255,10 +2231,8 @@ object StreamingQueries {
                 .withColumn("cosine", cosine)
                 .select(col("vec_id"), col("nid"), col("cosine"))
               e1.union(e2).write.mode("overwrite").parquet(s"$edgeDir/b$id")
-              mark("edges")
               newAdmits.write.mode("overwrite").parquet(s"$postDir/b$id")
               probes.write.mode("overwrite").parquet(s"$probeDir/b$id")
-              mark("post_probe")
               if (monitor) {
                 // e20's alert surface over the index AS IT STANDS after this
                 // batch (VERDICT r13 next #3): sample ∪-to-date corpus,
@@ -2333,11 +2307,8 @@ object StreamingQueries {
                 RecallAlertBus.post(RecallAlertBus.Alert(r.getLong(0),
                   r.getLong(1), r.getDouble(2), r.getDouble(3), r.getLong(4),
                   r.getBoolean(5)))
-                mark("monitor")
               }
               arr.unpersist()
-              phaseSink.foreach(f =>
-                f(id, "total", (System.nanoTime() - tb0) / 1e9))
               }
               ()
             }
@@ -2496,7 +2467,7 @@ object StreamingQueries {
     (s, dir) => {
       val qn = "s29_sink_" + UUID.randomUUID().toString.replace("-", "")
       val src = fileSource("s29")
-      StreamHarness.drainPublish(s, src, docsFeedPublishers(s, dir, src)) { raw =>
+      StreamHarness.drain(s, src, docsFeedPublishers(s, dir, src)) { raw =>
         s29Admission(raw)
           .writeStream.format("memory").queryName(qn)
           .option("checkpointLocation", StreamHarness.checkpointDir("s29"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Stateful-streaming scale probes (VERDICT r13 #1): the x100 bench
   * artifact excludes the s-series on the claim that streaming cost is
   * per-batch machinery, not data volume — but the committed stateless
-  * measurement ([[graft.StreamScale]]) exercised the one pipeline that
+  * measurement (`stream_scale.json`) exercised the one pipeline that
   * carries NO state. These probes drive the two expensive STATEFUL shapes —
   * the s05-shaped watermarked windowed aggregation and the s10-shaped
   * watermark-bounded stream-stream join — over a synthetic wire feed whose
@@ -71,12 +71,10 @@ object ScaleProbes {
     * and contaminate late-batch timings with sink growth). State rows per
     * open (window, key) pair; the watermark caps open windows at ~4, so
     * state plateaus at ≤ ~4·keys regardless of stream length. */
-  def windowProbe(s: SparkSession, batches: Int, rows: Int, keys: Int,
-                  partitions: Int = StreamHarness.StreamShufflePartitions): Seq[BatchPoint] = {
+  def windowProbe(s: SparkSession, batches: Int, rows: Int, keys: Int): Seq[BatchPoint] = {
+    val src = new FileStreamSource(StreamHarness.tempDir("sswin-feed"))
     val chunks = (0 until batches).map(k => chunk(s, k, rows, keys))
-    val progs = StreamHarness.drainProgressed(
-      s, new FileStreamSource(StreamHarness.tempDir("sswin-feed")), chunks,
-      partitions) { raw =>
+    val progs = StreamHarness.drain(s, src, StreamHarness.appends(src, chunks)) { raw =>
       StreamPipelines.parseFitbit(raw)
         .select(try_to_timestamp(col("ts_str"),
           lit("yyyy-MM-dd HH:mm:ss")).as("event_ts"), col("user_id"))
@@ -98,14 +96,14 @@ object ScaleProbes {
     * both sides under 2 h watermarks. Join state is watermark-bounded:
     * ~4 batches of the dense side + ~5·keys of the sparse side, flat in
     * stream length. */
-  def joinProbe(s: SparkSession, batches: Int, rows: Int, keys: Int,
-                partitions: Int = StreamHarness.StreamShufflePartitions): Seq[BatchPoint] = {
+  def joinProbe(s: SparkSession, batches: Int, rows: Int, keys: Int): Seq[BatchPoint] = {
+    val srcA = new FileStreamSource(StreamHarness.tempDir("ssjoina-feed"))
+    val srcB = new FileStreamSource(StreamHarness.tempDir("ssjoinb-feed"))
     val dense = (0 until batches).map(k => chunk(s, k, rows, keys))
     val sparse = (0 until batches).map(k => chunk(s, k, keys, keys))
-    val progs = StreamHarness.drain2Progressed(s,
-      new FileStreamSource(StreamHarness.tempDir("ssjoina-feed")), dense,
-      new FileStreamSource(StreamHarness.tempDir("ssjoinb-feed")), sparse,
-      partitions) { (rawA, rawB) =>
+    val progs = StreamHarness.drain(s, Seq(
+      srcA -> StreamHarness.appends(srcA, dense),
+      srcB -> StreamHarness.appends(srcB, sparse))) { case Seq(rawA, rawB) =>
       val evs = StreamPipelines.parseFitbit(rawA)
         .select(col("user_id"),
           timestamp_millis(col("machine_ts").cast("long")).as("a_ts"))

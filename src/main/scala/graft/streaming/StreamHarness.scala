@@ -1,10 +1,15 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path}
+import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max, min}
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 
 /** Drives a real `StreamingQuery` to completion over a [[StreamSource]] —
   * the deterministic stand-in for the reference's Kafka subscription
@@ -22,19 +27,18 @@ object StreamHarness {
     *
     * Safety invariant (ADVICE r5): the hook may delete a checkpoint dir out
     * from under a RUNNING query, which would wedge it — but every harness
-    * entry point ([[drain]]/[[drain2]] and the spec helpers) stops its query
+    * entry point ([[drain]] and the spec helpers) stops its query
     * in a `finally` before returning, so by the time the JVM reaches
     * shutdown hooks no streaming query handed one of these dirs is still
     * active. Callers that start long-lived queries outside the harness must
     * manage their own checkpoint dirs. */
-  private val createdDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+  private val createdDirs = new ConcurrentLinkedQueue[Path]()
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
     createdDirs.forEach { dir =>
       try {
         if (Files.exists(dir)) {
           val s = Files.walk(dir)
           try {
-            import scala.jdk.CollectionConverters._
             s.sorted(java.util.Comparator.reverseOrder())
               .iterator().asScala.foreach(Files.deleteIfExists(_))
           } finally s.close()
@@ -94,122 +98,79 @@ object StreamHarness {
     * as total state / comfortable-store-size, independent of executor count. */
   val StreamShufflePartitions: Int = 4
 
-  /** Run `body` with `partitions` as the session's shuffle partition count,
-    * restoring the caller's setting afterwards (batch queries outside the
-    * drain keep their cluster-sized parallelism). */
-  private def withStreamShuffle[T](spark: SparkSession,
-      partitions: Int = StreamShufflePartitions)(body: => T): T = {
+  /** Run `body` with [[StreamShufflePartitions]] as the session's shuffle
+    * partition count, restoring the caller's setting afterwards (batch
+    * queries outside the drain keep their cluster-sized parallelism). */
+  private def withStreamShuffle[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, partitions.toString)
+    spark.conf.set(key, StreamShufflePartitions.toString)
     try body
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  /** Feed `chunks` through `source` one micro-batch at a time (chunk
-    * boundaries = batch boundaries), draining after each chunk, then stop.
-    * `start` receives the raw-line streaming DataFrame (single `value`
-    * column) and must start the query. */
-  def drain(spark: SparkSession, source: StreamSource, chunks: Seq[DataFrame])(
-      start: DataFrame => StreamingQuery): Unit =
-    drainPublish(spark, source, chunks.map(c => () => source.append(c)))(start)
+  /** Publish steps that append each chunk to `source`, one per micro-batch. */
+  def appends(source: StreamSource, chunks: Seq[DataFrame]): Seq[() => Unit] =
+    chunks.map(c => () => source.append(c))
 
-  /** [[drain]] generalized over the publish step: each element publishes one
-    * micro-batch's lines — a DataFrame append or a staged-file link
-    * ([[FileStreamSource.appendStaged]]) — and the query drains after each.
-    * The staged form removes the per-query feed re-render (guide §1.2: the
-    * distributed algorithm first — don't compute what a previous identical
-    * job already rendered), leaving the engine's micro-batch machinery
-    * itself as the timed cost. */
-  def drainPublish(spark: SparkSession, source: StreamSource,
-                   publish: Seq[() => Unit])(
-      start: DataFrame => StreamingQuery): Unit =
+  /** Drive one streaming query over `feeds` to completion, then stop it.
+    * Each feed is a source and its publish steps: a DataFrame append
+    * ([[appends]]) or a staged-file link ([[FileStreamSource.appendStaged]]).
+    * `start` receives the sources' raw-line DataFrames (one `value` column
+    * each, in feed order) and must start the query. Step k of every feed is
+    * published, then the query drains (`processAllAvailable`), so publish
+    * boundaries are batch boundaries on every side; a shorter feed simply
+    * stops publishing.
+    *
+    * Returns the [[StreamingQueryProgress]] of EVERY data-carrying trigger,
+    * in order. They are collected by a listener rather than read from
+    * `recentProgress`, which keeps only the last
+    * `spark.sql.streaming.numRecentProgressUpdates` entries and would
+    * silently drop the first batches of a long drain. No-data triggers are
+    * excluded: they measure idle polling, not the pipeline. */
+  def drain(spark: SparkSession, feeds: Seq[(StreamSource, Seq[() => Unit])])(
+      start: Seq[DataFrame] => StreamingQuery): Seq[StreamingQueryProgress] =
     withStreamShuffle(spark) {
-      val q = start(source.open(spark))
-      try publish.foreach { p => p(); q.processAllAvailable() }
-      finally q.stop()
-    }
-
-  /** Two-source sibling of [[drainPublish]]: both publish lists advance in
-    * lockstep (publish boundaries = batch boundaries on both sides). */
-  def drain2Publish(spark: SparkSession,
-                    sourceA: StreamSource, publishA: Seq[() => Unit],
-                    sourceB: StreamSource, publishB: Seq[() => Unit])(
-      start: (DataFrame, DataFrame) => StreamingQuery): Unit =
-    withStreamShuffle(spark) {
-      val q = start(sourceA.open(spark), sourceB.open(spark))
-      try publishA.map(Option(_)).zipAll(publishB.map(Option(_)), None, None)
-        .foreach { case (a, b) =>
-          a.foreach(_())
-          b.foreach(_())
+      val log = new ProgressLog
+      spark.streams.addListener(log)
+      try {
+        val q = start(feeds.map(_._1.open(spark)))
+        try (0 until feeds.map(_._2.size).maxOption.getOrElse(0)).foreach { k =>
+          feeds.foreach(_._2.lift(k).foreach(_()))
           q.processAllAvailable()
         } finally q.stop()
+        log.dataProgress(q)
+      } finally spark.streams.removeListener(log)
     }
 
-  /** [[drain]] variant that also returns each data-carrying micro-batch's
-    * processing time in ms, read from the query's progress log after the
-    * feed drains. `triggerExecution` is Structured Streaming's end-to-end
-    * per-trigger duration — offset resolution + planning + execution + sink
-    * commit — which is the number that must stay under the trigger interval
-    * for a backlog not to grow (the DStream stability condition the
-    * reference's 1 s interval implies, `IOTSparkStreaming.scala:29` /
-    * BASELINE.md "streaming latency"). No-data triggers are excluded: they
-    * measure idle polling, not the pipeline. */
-  def drainMeasured(spark: SparkSession, source: StreamSource,
-                    chunks: Seq[DataFrame])(
-      start: DataFrame => StreamingQuery): Seq[Long] =
-    drainProgressed(spark, source, chunks)(start)
-      .map(_.durationMs.get("triggerExecution").longValue())
-
-  /** [[drainMeasured]] generalized to return the full per-batch
-    * [[StreamingQueryProgress]] objects for data-carrying triggers — the
-    * stateful scale probes read state-store row counts
-    * (`stateOperators.numRowsTotal`) alongside trigger times, the evidence
-    * that watermarks bound state in stream length (VERDICT r13 #1).
-    * `partitions` overrides the state-sized shuffle-partition default so a
-    * probe can measure the partition-count axis explicitly. */
-  def drainProgressed(spark: SparkSession, source: StreamSource,
-                      chunks: Seq[DataFrame],
-                      partitions: Int = StreamShufflePartitions)(
+  /** Single-source [[drain]]. */
+  def drain(spark: SparkSession, source: StreamSource, publish: Seq[() => Unit])(
       start: DataFrame => StreamingQuery): Seq[StreamingQueryProgress] =
-    withStreamShuffle(spark, partitions) {
-      val q = start(source.open(spark))
-      try {
-        chunks.foreach { chunk =>
-          source.append(chunk)
-          q.processAllAvailable()
+    drain(spark, Seq(source -> publish))(in => start(in.head))
+
+  /** Every progress event the session's queries post while it is attached. */
+  private final class ProgressLog extends StreamingQueryListener {
+    private val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    private val terminated = scala.collection.mutable.Set.empty[UUID] // guarded by itself
+
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit = progress.add(e.progress)
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+      terminated.synchronized { terminated.add(e.runId); terminated.notifyAll() }
+
+    /** The data-carrying progress of `q`'s run, once `q` has stopped. The
+      * listener bus delivers a query's events in order, so after its
+      * termination event arrives none of its progress is still in flight. */
+    def dataProgress(q: StreamingQuery): Seq[StreamingQueryProgress] = {
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      terminated.synchronized {
+        while (!terminated.contains(q.runId)) {
+          val left = (deadline - System.nanoTime()) / 1000000L
+          require(left > 0, s"query ${q.name}: termination event not delivered within 60 s")
+          terminated.wait(left)
         }
-        q.recentProgress.toSeq.filter(_.numInputRows > 0)
-      } finally q.stop()
+      }
+      progress.asScala.filter(p => p.runId == q.runId && p.numInputRows > 0).toSeq
     }
-
-  /** Two-source variant of [[drainProgressed]] (stream-stream probes). */
-  def drain2Progressed(spark: SparkSession,
-                       sourceA: StreamSource, chunksA: Seq[DataFrame],
-                       sourceB: StreamSource, chunksB: Seq[DataFrame],
-                       partitions: Int = StreamShufflePartitions)(
-      start: (DataFrame, DataFrame) => StreamingQuery): Seq[StreamingQueryProgress] =
-    withStreamShuffle(spark, partitions) {
-      val q = start(sourceA.open(spark), sourceB.open(spark))
-      try {
-        chunksA.map(Option(_)).zipAll(chunksB.map(Option(_)), None, None)
-          .foreach { case (a, b) =>
-            a.foreach(sourceA.append)
-            b.foreach(sourceB.append)
-            q.processAllAvailable()
-          }
-        q.recentProgress.toSeq.filter(_.numInputRows > 0)
-      } finally q.stop()
-    }
-
-  /** Two-source variant of [[drain]] for stream-stream operators: both
-    * feeds advance in lockstep chunks (chunk boundaries = batch boundaries
-    * on both sides). */
-  def drain2(spark: SparkSession,
-             sourceA: StreamSource, chunksA: Seq[DataFrame],
-             sourceB: StreamSource, chunksB: Seq[DataFrame])(
-      start: (DataFrame, DataFrame) => StreamingQuery): Unit =
-    drain2Publish(spark,
-      sourceA, chunksA.map(c => () => sourceA.append(c)),
-      sourceB, chunksB.map(c => () => sourceB.append(c)))(start)
+  }
 }

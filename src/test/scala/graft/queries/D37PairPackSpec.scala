@@ -35,6 +35,14 @@ class D37PairPackSpec extends SparkSpec {
     assert(packs(4L, 4L) === Seq.empty)
   }
 
+  test("kernel: an id array past 65 536 entries is refused, not wrapped") {
+    // 65 537 ids give 2 147 516 416 pairs: over Int.MaxValue, where the old
+    // Int product wrapped to a negative size.
+    val e = intercept[IllegalArgumentException](packs((0L until 65537L): _*))
+    assert(e.getMessage.contains("graft_pair_pack"), e.getMessage)
+    assert(e.getMessage.contains("2147516416"), e.getMessage)
+  }
+
   test("kernel: 32-bit boundary ids pack and unpack exactly (unsigned shift)") {
     val hi = 0xFFFFFFFFL // 2^32 - 1: sets the sign bit of the packed long
     val pk = packs(7L, hi)

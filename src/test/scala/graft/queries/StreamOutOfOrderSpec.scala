@@ -48,8 +48,8 @@ class StreamOutOfOrderSpec extends SparkSpec {
 
   test("s26 admission under a permuted feed is first-seen-wins per batch") {
     val qn = "oo26_" + UUID.randomUUID().toString.replace("-", "")
-    StreamHarness.drain(spark,
-      new FileStreamSource(StreamHarness.tempDir("oo26-feed")), permutedChunks) { raw =>
+    val src = new FileStreamSource(StreamHarness.tempDir("oo26-feed"))
+    StreamHarness.drain(spark, src, StreamHarness.appends(src, permutedChunks)) { raw =>
       StreamingQueries.s26Admission(raw)
         .writeStream.format("memory").queryName(qn)
         .option("checkpointLocation", StreamHarness.checkpointDir("oo26"))
@@ -94,8 +94,8 @@ class StreamOutOfOrderSpec extends SparkSpec {
 
   test("s27 packing under a permuted feed follows arrival order per shard") {
     val qn = "oo27_" + UUID.randomUUID().toString.replace("-", "")
-    StreamHarness.drain(spark,
-      new FileStreamSource(StreamHarness.tempDir("oo27-feed")), permutedChunks) { raw =>
+    val src = new FileStreamSource(StreamHarness.tempDir("oo27-feed"))
+    StreamHarness.drain(spark, src, StreamHarness.appends(src, permutedChunks)) { raw =>
       StreamingQueries.s27Segments(raw)
         .writeStream.format("memory").queryName(qn)
         .option("checkpointLocation", StreamHarness.checkpointDir("oo27"))

@@ -38,7 +38,8 @@ object TestFeeds {
       start: DataFrame => StreamingQuery): Unit = {
     import spark.implicits._
     val sz = math.max(1, (lines.length + nChunks - 1) / nChunks)
-    StreamHarness.drain(spark, new MemoryStreamSource(spark),
-      lines.grouped(sz).toSeq.map(_.toDF("value")))(start)
+    val source = new MemoryStreamSource(spark)
+    StreamHarness.drain(spark, source,
+      StreamHarness.appends(source, lines.grouped(sz).toSeq.map(_.toDF("value"))))(start)
   }
 }
