@@ -1,31 +1,27 @@
 package graft
 
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main (driver contract): runs every registered query on
-  * `SPARK_GRAFT_SF_DIR`, prints ONE JSON line.
+  * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line ([[artifact]]).
   *
-  * Measurement honesty (VERDICT r1 item 4, r5 item 4):
-  *  - the action is a `noop`-format write, which fully evaluates every
-  *    projection and sort in the plan — `.count()` would let Catalyst prune
-  *    the expensive expressions and drop final sorts;
-  *  - one warmup query runs first (untimed) so the first measured query does
-  *    not absorb JVM/codegen warmup;
-  *  - each query runs `SPARK_GRAFT_REPS` times (default 3) and reports the
-  *    MEDIAN — single-shot timings on a shared machine were up to 12× noise
-  *    (r3); the median is robust to one GC pause or page-cache miss. Reps
-  *    are interleaved round-robin across queries (rep 1 of all, then rep 2,
-  *    …) so a contended stretch lands in one rep of many medians — rejected
-  *    — rather than every rep of a few queries (r10);
-  *  - a second, smaller scale factor (`SPARK_GRAFT_SCALE_DIR`, default
-  *    sf0.01, one rep) is timed in the same JVM and reported under
-  *    `"scaling"`, so the round artifact carries MEASURED scale slopes:
-  *    data-bound queries should scale ~linearly with the 10× size ratio,
-  *    streaming queries ~flat (their cost is per-batch overhead, not rows);
-  *  - failures are reported per-query in an `"err"` map instead of being
-  *    swallowed into a fast-looking elapsed time;
-  *  - a derived 10× scale point (`"scale_up"`, built once by [[ScaleUp]]
-  *    from the primary SF) times the data-path queries one rep each, so the
-  *    artifact carries a measured slope ABOVE the largest driver SF, not
-  *    just plan-shape arguments.
+  *  - Every run is [[timed]]: a `noop`-format write with its error captured.
+  *  - One warmup query runs first, untimed, so the first measured query does
+  *    not absorb JVM and codegen warmup.
+  *  - Each query runs `SPARK_GRAFT_REPS` times (default 3), interleaved
+  *    round-robin, and reports the median, which is robust to one GC pause
+  *    or page-cache miss.
+  *  - A second, smaller scale factor (`SPARK_GRAFT_SCALE_DIR`, default
+  *    sf0.01, one rep) is timed in the same JVM under `"scaling"`: data-bound
+  *    queries should grow ~linearly with the 10× size ratio, streaming
+  *    queries stay ~flat (their cost is per-batch overhead, not rows).
+  *  - A derived 10× scale point (`"scale_up"`, built once by [[ScaleUp]]
+  *    from the primary SF) times the data-path queries, so the artifact
+  *    carries a measured slope above the largest driver SF.
+  *  - Failures are reported per query in `"err"` maps instead of being
+  *    swallowed into a fast-looking elapsed time.
   */
 object Bench {
   /** Queries whose first run per directory BUILDS a memoized index/training
@@ -79,29 +75,109 @@ object Bench {
     IndexPrebuild.filter(b => names.contains(b) ||
       names.exists(n => BuildDeps.getOrElse(n, Nil).contains(b)))
 
+  /** Streaming-latency attestation: per-batch processing time of the
+    * s01-shaped pipeline over 100 measured batches of 10k rows each (10×
+    * the reference's ~1000 events per 1 s trigger), reported against the
+    * reference's implicit 1000 ms bound. 100 batches make p99 meaningful
+    * and max interpretable against it. */
+  val LatBatches = 100
+  val LatRows = 10000
+
+  /** Reps per query at the derived scale point: single-shot cells there
+    * could not tell sub-second queries' slopes from first-run codegen and
+    * page-cache noise. */
+  val ScaleUpReps = 3
+
+  /** One timed run: wall seconds, and the first line of the error if the
+    * query threw (its time is then a time-to-error, not a runtime). */
+  final case class Run(sec: Double, err: Option[String])
+
+  /** How every Bench error cell reads: the first line of the message (else
+    * the class name), at most 200 characters. */
+  private def firstLine(e: Throwable): String =
+    Option(e.getMessage).getOrElse(e.getClass.getName).linesIterator.take(1).mkString.take(200)
+
+  /** Runs `name` on `dir` once into the `noop` sink, which fully evaluates
+    * every projection and sort in the plan (`.count()` would let Catalyst
+    * prune them). A failure is captured, never a fast-looking elapsed time. */
+  def timed(spark: SparkSession, name: String, dir: String): Run = {
+    val t0 = System.nanoTime()
+    val err =
+      try {
+        SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
+        None
+      } catch { case e: Throwable => Some(firstLine(e)) }
+    Run((System.nanoTime() - t0) / 1e9, err)
+  }
+
+  /** `reps` runs of every query in `names` on `dir`, per query in rep order.
+    * Reps interleave round-robin (rep 1 of every query, then rep 2, …), so
+    * a contended wall-clock stretch inflates one rep of many queries, which
+    * each median rejects, instead of every rep of the few queries that ran
+    * inside it. */
+  private def interleaved(spark: SparkSession, names: Seq[String], dir: String,
+                          reps: Int): Seq[(String, Seq[Run])] =
+    names.zip((1 to reps).map(_ => names.map(timed(spark, _, dir))).transpose)
+
+  /** Bench's one JSON line. `runs`, `scaling` and `scaleUp` hold every run
+    * of each query at the primary, secondary and derived scale; a section
+    * with no runs is left out, as `rep_times` is unless `allReps`.
+    *
+    *  - A cell is the median of its runs, errored if any run errored. The
+    *    primary `queries` map keeps an errored query's time-to-error; the
+    *    scale sections write it as `null`. Every error lands in an `err` map.
+    *  - The headline `value` sums only queries that ran: a time-to-error is
+    *    not a runtime, and `errored_count` makes the omission visible.
+    *  - `rep_cv` is each query's [[Stats.repCv]], and `rep_cv_median` the
+    *    run's contention flag (README: above 0.35, re-run before quoting).
+    */
+  def artifact(runs: Seq[(String, Seq[Run])], reps: Int, sf: String,
+               scaleDir: String, scaling: Seq[(String, Seq[Run])],
+               scaleUpDir: String, scaleUpFactor: Int, scaleUp: Seq[(String, Seq[Run])],
+               latency: Either[String, Seq[Long]], allReps: Boolean): String = {
+    def cells(rs: Seq[(String, Seq[Run])]): Seq[(String, Run)] = rs.map { case (k, r) =>
+      k -> Run(Stats.median(r.map(_.sec)), r.flatMap(_.err).headOption)
+    }
+    def errs(cs: Seq[(String, Run)]) = ListMap.from(cs.collect { case (k, Run(_, Some(e))) => k -> e })
+    def section(head: (String, Any)*)(rs: Seq[(String, Seq[Run])]) =
+      Option.when(rs.nonEmpty) {
+        val cs = cells(rs)
+        ListMap.from(head) ++ Seq(
+          "queries" -> ListMap.from(cs.map { case (k, c) => k -> (if (c.err.isEmpty) Some(c.sec) else None) }),
+          "err" -> errs(cs))
+      }
+    val results = cells(runs)
+    val ok = results.filter(_._2.err.isEmpty)
+    val lat = latency match {
+      case Right(ms) if ms.nonEmpty => ListMap(
+        "pipeline" -> "s01-shaped", "batches" -> ms.size, "rows_per_batch" -> LatRows,
+        "max_batch_ms" -> ms.max, "p99_batch_ms" -> Stats.percentileMs(ms, 0.99),
+        "median_batch_ms" -> Stats.medianMs(ms), "bound_ms" -> 1000)
+      case Right(_) => ListMap("err" -> "no data batches observed")
+      case Left(e) => ListMap("err" -> e)
+    }
+    val repCv = runs.flatMap { case (k, r) => Stats.repCv(r.map(_.sec)).map(k -> _) }
+    ArtifactOut.json(ListMap[String, Any](
+      "metric" -> "total", "value" -> ok.map(_._2.sec).sum, "unit" -> "sec",
+      "errored_count" -> (results.size - ok.size),
+      "queries" -> ListMap.from(results.map { case (k, c) => k -> c.sec }),
+      "err" -> errs(results), "reps" -> reps, "sf" -> sf) ++
+      section("sf" -> scaleDir)(scaling).map("scaling" -> _) ++
+      section("dir" -> scaleUpDir, "factor" -> scaleUpFactor, "reps" -> ScaleUpReps)(scaleUp)
+        .map("scale_up" -> _) ++
+      Seq("latency" -> lat) ++
+      (if (repCv.isEmpty) Nil
+       else Seq("rep_cv" -> ListMap.from(repCv.map { case (k, c) => k -> ArtifactOut.round4(c) }),
+                "rep_cv_median" -> ArtifactOut.round4(Stats.median(repCv.map(_._2))))) ++
+      (if (allReps) Seq("rep_times" -> ListMap.from(runs.map { case (k, r) => k -> r.map(_.sec) }))
+       else Nil))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt)
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/root/testdata/sf0.01")
     val spark = GraftSession.create()
-
-    def runOnce(name: String, dir: String): (Double, Option[String]) = {
-      val t0 = System.nanoTime()
-      val err =
-        try {
-          SparkEntry.queries(name)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          None
-        } catch {
-          case e: Throwable =>
-            Some(Option(e.getMessage).getOrElse(e.getClass.getName)
-              .linesIterator.take(1).mkString.take(200))
-        }
-      ((System.nanoTime() - t0) / 1e9, err)
-    }
-
-    // One shared median/percentile definition (ADVICE r13) — see [[Stats]].
-    def median(xs: Seq[Double]): Double = Stats.median(xs)
 
     // Optional comma-separated name filter (exact names or prefixes) so a
     // caller — e.g. BenchAB — can time a subset without paying for the
@@ -112,208 +188,73 @@ object Bench {
     require(names.nonEmpty, s"SPARK_GRAFT_ONLY matched no queries: $only")
     val scaleDirOk = scaleDir != sfDir &&
       java.nio.file.Files.isDirectory(java.nio.file.Paths.get(scaleDir))
-    runOnce(names.head, sfDir) // warmup: JVM + codegen + parquet footer caches
-    // Pre-build every memoized index/training structure at BOTH scale
+    timed(spark, names.head, sfDir) // warmup: JVM + codegen + parquet footer caches
+    // Pre-build every memoized index/training structure at both scale
     // factors ([[IndexPrebuild]]): index construction is one job at
     // corpus-load time in production, so medians and the single-rep scaling
-    // column measure the probe/consume path (ADVICE r6; VERDICT r10 #1's
-    // methodology made uniform).
+    // column measure the probe/consume path.
     for (n <- prebuildFor(names)) {
-      runOnce(n, sfDir)
-      if (scaleDirOk) runOnce(n, scaleDir)
+      timed(spark, n, sfDir)
+      if (scaleDirOk) timed(spark, n, scaleDir)
     }
-    // Stage every wire feed untimed, next to the index pre-build (ADVICE
-    // r17 #4, optimization r18): staging renders the same bytes a broker
-    // would already hold — fixture manufacture, not the stream under test.
-    // Through r17 the first consuming query per (dir, tag) paid the render
-    // inside ONE timed rep (inflating its rep CV while every later consumer
-    // excluded feed manufacture); pre-staging removes the first-payer
-    // asymmetry so all 30 streaming medians time the same thing: the
+    // Stage every wire feed untimed, next to the index pre-build: staging
+    // renders the same bytes a broker would already hold — fixture
+    // manufacture, not the stream under test — so no query's timed rep
+    // absorbs it and all streaming medians time the same thing: the
     // micro-batch engine, state stores, sinks, and readback.
     if (names.exists(_.matches("s\\d\\d_.*"))) {
       graft.queries.StreamingQueries.prestageFeeds(spark, sfDir)
       if (scaleDirOk) graft.queries.StreamingQueries.prestageFeeds(spark, scaleDir)
     }
 
-    // Reps interleave ROUND-ROBIN across queries — rep 1 of every query,
-    // then rep 2, … — so one contended wall-clock stretch inflates ONE rep
-    // of many queries (each median rejects it) instead of ALL reps of the
-    // few queries that happened to run inside it (VERDICT r10 #2: the
-    // driver-box artifact carried c01 = 48.6 s vs 1.38 s quiet because all
-    // consecutive reps landed in a single contended window).
-    def interleavedFull(ns: Seq[String], dir: String, r: Int)
-        : (Seq[(String, (Double, Option[String]))], Seq[(String, Seq[Double])]) = {
-      val byRep = (1 to r).map(_ => ns.map(n => runOnce(n, dir)))
-      val med = ns.zipWithIndex.map { case (n, i) =>
-        val runs = byRep.map(_(i))
-        n -> (median(runs.map(_._1)), runs.flatMap(_._2).headOption)
-      }
-      (med, ns.zipWithIndex.map { case (n, i) => n -> byRep.map(_(i)._1) })
-    }
-    def interleaved(ns: Seq[String], dir: String, r: Int)
-        : Seq[(String, (Double, Option[String]))] = interleavedFull(ns, dir, r)._1
-
-    val (results, repTimes) = interleavedFull(names, sfDir, reps)
+    val runs = interleaved(spark, names, sfDir, reps)
     // Scale slope: one rep per query at the secondary SF (skipped when it
-    // is missing or identical to the primary). Failures null the time and
-    // land in the scaling err map — never a fast-looking elapsed (ADVICE r6).
+    // is missing or identical to the primary).
     val scaling =
-      if (!scaleDirOk) Seq.empty[(String, (Double, Option[String]))]
-      else names.map(n => n -> runOnce(n, scaleDir))
+      if (!scaleDirOk) Nil else names.map(n => n -> Seq(timed(spark, n, scaleDir)))
 
-    // Measured ≥10× scale point (VERDICT r7 missing #2): replicate the
-    // primary SF 10× into a derived dir (one-time, content-decorrelated —
-    // see ScaleUp's scaladoc) and run the data-path queries once each.
-    // Streaming/sink queries are excluded: their cost is micro-batch
-    // machinery, already shown ~flat by the sf0.01→sf0.1 slope. d07's
-    // sketch parquet is pre-built untimed, same methodology as the primary.
+    // Measured ≥10× scale point: replicate the primary SF into a derived dir
+    // (one-time, content-decorrelated — see ScaleUp's scaladoc) and run the
+    // data-path queries there. Streaming/sink queries are excluded: their
+    // cost is micro-batch machinery, already shown ~flat by the
+    // sf0.01→sf0.1 slope. Index structures are pre-built untimed, as at the
+    // primary SF.
     val scaleUpFactor = sys.env.getOrElse("SPARK_GRAFT_SCALEUP_FACTOR", "10").toInt
     val scaleUpDir = sys.env.getOrElse("SPARK_GRAFT_SCALEUP_DIR", "derived/x10")
-    // Median-of-N at the scale point too (default 3, VERDICT r8 #6): the r8
-    // single-shot 10x timings put five sub-second queries at 16-26x slopes
-    // that could not be told apart from first-run codegen + page-cache
-    // noise; medians make the slope column trustworthy.
-    val scaleUpReps =
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALEUP_REPS", "3").toInt)
     val dataPath = names.filter(n =>
       !n.matches("s\\d\\d_.*") && !n.startsWith("k0") && n != "c01_multiplex_parse")
-    val scaleUp: Seq[(String, (Double, Option[String]))] =
-      if (scaleUpFactor <= 1) Seq.empty
+    val scaleUp =
+      if (scaleUpFactor <= 1) Nil
       else
         try {
           ScaleUp.ensure(spark, sfDir, scaleUpDir, scaleUpFactor)
-          for (n <- prebuildFor(dataPath))
-            runOnce(n, scaleUpDir) // untimed index/training build
-          interleaved(dataPath, scaleUpDir, scaleUpReps)
+          for (n <- prebuildFor(dataPath)) timed(spark, n, scaleUpDir)
+          interleaved(spark, dataPath, scaleUpDir, ScaleUpReps)
         } catch {
-          case e: Throwable =>
-            Seq("_scaleup_build" -> (0.0, Some(
-              Option(e.getMessage).getOrElse(e.getClass.getName)
-                .linesIterator.take(1).mkString.take(200))))
+          case e: Throwable => Seq("_scaleup_build" -> Seq(Run(0.0, Some(firstLine(e)))))
         }
 
-    // Streaming-latency attestation (VERDICT r10 #8 / BASELINE.md): per-
-    // batch processing time of the reference-shaped flagship pipeline at a
-    // reference-like arrival rate (default 20 batches × 1000 events — one
-    // trigger interval's worth each), reported against the reference's
-    // implicit 1000 ms bound. Skipped (with an err) rather than failing the
-    // bench: latency is an attestation, not a correctness gate.
-    // Default arrival rate is 10× the reference-like 1000 rows/batch
-    // (VERDICT r11 next #6): the r11 artifact showed 218 ms max at 1k
-    // rows/batch, leaving headroom unquantified; the committed attestation
-    // now runs at 10k rows per 1 s-trigger batch.
-    // 100 measured batches (VERDICT r12 next #4): the r12 20-batch
-    // attestation let one contended batch dominate `max`; 100 batches make
-    // p99 meaningful and max interpretable against it.
-    val latBatches = sys.env.getOrElse("SPARK_GRAFT_LAT_BATCHES", "100").toInt
-    val latRows = sys.env.getOrElse("SPARK_GRAFT_LAT_ROWS", "10000").toInt
+    // The latency block is an attestation, not a correctness gate: a
+    // failure lands in its `err` rather than failing the bench.
     val latency: Either[String, Seq[Long]] =
       if (only.isDefined) Left("skipped: SPARK_GRAFT_ONLY filter active")
       else
-        try Right(graft.queries.StreamingQueries
-          .latencyProbe(spark, sfDir, latBatches, latRows))
-        catch {
-          case e: Throwable => Left(Option(e.getMessage)
-            .getOrElse(e.getClass.getName).linesIterator.take(1).mkString.take(200))
-        }
+        try Right(graft.queries.StreamingQueries.latencyProbe(spark, sfDir, LatBatches, LatRows))
+        catch { case e: Throwable => Left(firstLine(e)) }
 
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    val qs = results.map { case (k, (sec, _)) => s"${jstr(k)}:$sec" }
-      .mkString("{", ",", "}")
-    val errs = results.collect { case (k, (_, Some(e))) => s"${jstr(k)}:${jstr(e)}" }
-      .mkString("{", ",", "}")
-    val scal =
-      if (scaling.isEmpty) ""
-      else {
-        val sq = scaling.map {
-          case (k, (_, Some(_))) => s"${jstr(k)}:null"
-          case (k, (sec, None)) => s"${jstr(k)}:$sec"
-        }.mkString("{", ",", "}")
-        val serr = scaling.collect { case (k, (_, Some(e))) =>
-          s"${jstr(k)}:${jstr(e)}"
-        }.mkString("{", ",", "}")
-        s""","scaling":{"sf":${jstr(scaleDir)},"queries":$sq,"err":$serr}"""
-      }
-    val scup =
-      if (scaleUp.isEmpty) ""
-      else {
-        val sq = scaleUp.map {
-          case (k, (_, Some(_))) => s"${jstr(k)}:null"
-          case (k, (sec, None)) => s"${jstr(k)}:$sec"
-        }.mkString("{", ",", "}")
-        val serr = scaleUp.collect { case (k, (_, Some(e))) =>
-          s"${jstr(k)}:${jstr(e)}"
-        }.mkString("{", ",", "}")
-        s""","scale_up":{"dir":${jstr(scaleUpDir)},"factor":$scaleUpFactor,"reps":$scaleUpReps,"queries":$sq,"err":$serr}"""
-      }
-    // Headline total sums only non-erroring queries — a time-to-analysis-
-    // error is not a runtime, and blending it in makes round-over-round
-    // totals incomparable (ADVICE r9). errored_count makes the omission
-    // visible in the artifact itself.
-    val ok = results.filter(_._2._2.isEmpty)
-    val total = ok.map(_._2._1).sum
-    val nErr = results.size - ok.size
-    val lat = latency match {
-      case Right(ms) if ms.nonEmpty =>
-        val p99 = Stats.percentileMs(ms, 0.99)
-        s""","latency":{"pipeline":"s01-shaped","batches":${ms.size},"rows_per_batch":$latRows,"max_batch_ms":${ms.max},"p99_batch_ms":$p99,"median_batch_ms":${Stats.medianMs(ms)},"bound_ms":1000}"""
-      case Right(_) => s""","latency":{"err":"no data batches observed"}"""
-      case Left(e)  => s""","latency":{"err":${jstr(e)}}"""
-    }
-    // Per-query rep CV + headline median (VERDICT r16 next #6): a contended
-    // run should carry its own evidence. BENCH_r16 read a uniform 1.2×
-    // inflation over two same-HEAD quiet runs and nothing in the artifact
-    // said which run to trust; rep-to-rep CV does — the r16 quiet run's
-    // per-query spread reads ~0.2 median, a contended whole-leg run reads
-    // well above it. First-in-JVM rep excluded (cold codegen dominates it —
-    // the BenchAB CV rationale), so the CV reports steady-state noise.
-    // README threshold: treat a run with rep_cv_median > 0.35 as contended —
-    // re-run on a quiet box before quoting its medians.
-    val repCv: Seq[(String, Double)] = repTimes.collect {
-      case (k, ts0) if ts0.size >= 3 && ts0.sum > 0 =>
-        val ts = ts0.drop(1)
-        val m = ts.sum / ts.size
-        val sd = math.sqrt(ts.map(t => (t - m) * (t - m)).sum /
-          math.max(ts.size - 1, 1))
-        k -> (if (m > 0) sd / m else 0.0)
-    }
-    val repCvOut =
-      if (repCv.isEmpty) ""
-      else {
-        val cvs = repCv.map { case (k, c) => s"${jstr(k)}:${"%.4f".format(c)}" }
-          .mkString("{", ",", "}")
-        s""","rep_cv":$cvs,"rep_cv_median":${
-          "%.4f".format(median(repCv.map(_._2)))}"""
-      }
-    // Per-query raw rep times (SPARK_GRAFT_BENCH_ALLREPS=1): BenchAB's
-    // noise qualifier computes per-query rep CV from these — the medians
-    // alone cannot say how wide the rep spread was (VERDICT r13 next #5).
-    val repsOut =
-      if (!sys.env.get("SPARK_GRAFT_BENCH_ALLREPS").contains("1")) ""
-      else {
-        val rt = repTimes.map { case (k, ts) =>
-          s"${jstr(k)}:${ts.mkString("[", ",", "]")}"
-        }.mkString("{", ",", "}")
-        s""","rep_times":$rt"""
-      }
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","errored_count":$nErr,"queries":$qs,"err":$errs,"reps":$reps,"sf":"$sfDir"$scal$scup$lat$repCvOut$repsOut}"""
+    // Per-query raw rep times (SPARK_GRAFT_BENCH_ALLREPS=1) feed BenchAB's
+    // pooled medians and rep CVs.
+    val json = artifact(runs, reps, sfDir, scaleDir, scaling, scaleUpDir, scaleUpFactor, scaleUp,
+      latency, allReps = sys.env.get("SPARK_GRAFT_BENCH_ALLREPS").contains("1"))
     println(json)
-    // The round artifact is captured from a stdout tail that has truncated
-    // the JSON two rounds running (VERDICT r7 missing #1). Also write the
-    // complete line to a file the round commits, so per-query medians stay
-    // auditable regardless of how stdout is captured.
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    // A failed write warns loudly but does not fail the bench — stdout
-    // carries the same complete line (the driver contract).
-    ArtifactOut.write(outFile, json)
+    // Also write the complete line to a file, so per-query medians stay
+    // auditable however stdout is captured. A failed write warns but does
+    // not fail the bench: stdout carries the same line (the driver contract).
+    ArtifactOut.write(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json"), json)
     spark.stop()
     // A run with erroring queries is a red run: exit non-zero so the driver
-    // records it as such instead of rc:0 over a broken artifact (ADVICE r9).
+    // records it as such instead of rc 0 over a broken artifact.
+    val nErr = runs.count(_._2.exists(_.err.isDefined))
     if (nErr > 0) {
       System.err.println(s"[bench] $nErr queries errored at $sfDir")
       sys.exit(1)

@@ -1,7 +1,7 @@
 package graft
 
 /** Scratch timing harness (not part of the driver contract): times each
-  * named query once into the `noop` sink. `name@dir` runs a query against
+  * named query once with [[Bench.timed]]. `name@dir` runs a query against
   * an explicit directory (two-dir warm/cold experiments in one JVM); bare
   * names use `SPARK_GRAFT_SF_DIR`. */
 object Debug {
@@ -9,15 +9,16 @@ object Debug {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.create()
     val names = if (args.nonEmpty) args.toSeq else Seq("d07_minhash_pairs", "d08_simhash", "d09_ngram_jaccard")
-    names.foreach { spec =>
+    val errored = names.count { spec =>
       val (n, d) = spec.split("@") match {
         case Array(n0, d0) => (n0, d0)
         case _ => (spec, dir)
       }
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, d).write.format("noop").mode("overwrite").save()
-      println(f"[debug] $n@$d: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val r = Bench.timed(spark, n, d)
+      println(f"[debug] $n@$d: ${r.sec}%.2f s" + r.err.fold("")(e => s" ERROR: $e"))
+      r.err.isDefined
     }
     spark.stop()
+    if (errored > 0) sys.exit(1)
   }
 }

@@ -9,6 +9,8 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case _ => throw new IllegalArgumentException(
+        "usage: graft.Verify <sfDir> <outDir> [name,name,...]")
     }
     val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
@@ -28,27 +30,12 @@ object Verify {
           failures(name) = msg.linesIterator.take(3).mkString(" | ").take(500)
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), ArtifactOut.json(SparkEntry.oracleSql))
     // errors.json: name -> first-lines-of-message for every failed query.
     // Written even when empty so "no failures" is an asserted fact, not an
-    // absence. Exit 1 on any failure so the driver records a red run as red.
-    val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
+    // absence; tools/parity.py reports each entry. Exit 1 on any failure so
+    // the driver records a red run as red.
+    Files.writeString(Paths.get(s"$outDir/errors.json"), ArtifactOut.json(failures))
     spark.stop()
     if (failures.nonEmpty) {
       System.err.println(s"[verify] ${failures.size} quer${if (failures.size == 1) "y" else "ies"} failed: ${failures.keys.mkString(", ")}")

@@ -8,6 +8,8 @@ DuckDB against the sfDir parquet tables, and compares against the Spark
 parquet output in outDir/<name>/ — columns sorted by name, rows compared in
 order, doubles compared exactly (bitwise, which our deterministic-aggregation
 design guarantees). Strictly harsher than the driver (which may sort rows).
+A query listed in outDir/errors.json (Verify's failed queries) fails with
+Verify's message, whatever output an earlier run left in its directory.
 """
 import duckdb, json, sys, glob, os, time
 import numpy as np
@@ -29,9 +31,15 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    errors_path = f"{outdir}/errors.json"
+    errors = json.load(open(errors_path)) if os.path.exists(errors_path) else {}
     fails = 0
     slowest = (0.0, "")
     for name, sql in sorted(oracle.items()):
+        if name in errors:
+            print(f"{name}: FAIL SPARK ERROR: {errors[name]}")
+            fails += 1
+            continue
         t0 = time.monotonic()
         try:
             exp = con.sql(sql).df()
