@@ -2,8 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Shared machinery for idempotent keyed registers over parquet — the
   * hash-bucketed snapshot + atomically-swapped manifest design (the
@@ -73,13 +74,29 @@ abstract class BucketedSnapshotSink(path: String, keyCols: Seq[String],
   private def bucketPath(version: String, bucket: Int) =
     root.resolve(version).resolve(s"$BucketCol=$bucket")
 
+  /** Schema of the rows this register last wrote (bucket column excluded).
+    * Reads pass it to the parquet reader, which then skips the footer-
+    * inference job; None until this instance first reads or writes, so the
+    * first read after a reopen infers it once. */
+  @volatile private var writtenSchema: Option[StructType] = None
+
+  /** The rows of the given buckets' current files. */
+  private def readBuckets(spark: SparkSession, buckets: Seq[(Int, String)]): DataFrame = {
+    val paths = buckets.map { case (b, v) => bucketPath(v, b).toString }
+    writtenSchema match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None =>
+        val df = spark.read.parquet(paths: _*)
+        writtenSchema = Some(df.schema)
+        df
+    }
+  }
+
   /** Read the current snapshot (union of every bucket's current files), or
     * None before the first batch. */
   override def snapshot(spark: SparkSession): Option[DataFrame] = {
     val man = currentManifest
-    if (man.isEmpty) None
-    else Some(spark.read.parquet(
-      man.toSeq.map { case (b, v) => bucketPath(v, b).toString }: _*))
+    if (man.isEmpty) None else Some(readBuckets(spark, man.toSeq))
   }
 
   /** The next full contents of the touched buckets, given their previous
@@ -111,20 +128,22 @@ abstract class BucketedSnapshotSink(path: String, keyCols: Seq[String],
     // below so the engine never carries sink-batch blocks across triggers.
     val cached = batch.persist()
     try {
-      // Touched-bucket discovery is metadata, not data: ≤ nBuckets ints.
-      val touched = cached.select(bucketOf.as(BucketCol))
-        .distinct().collect().map(_.getInt(0)).toSet
+      // Touched-bucket discovery is metadata, not data: one job with no
+      // shuffle, in which each partition returns its distinct bucket ids
+      // (≤ nBuckets ints); the collected ids form the touched set.
+      val touched = cached.select(bucketOf).as(Encoders.scalaInt)
+        .mapPartitions((ids: Iterator[Int]) => ids.toSet.iterator)(Encoders.scalaInt)
+        .collect().toSet
       if (touched.nonEmpty) {
-        val prevPaths = touched.toSeq.sorted
-          .flatMap(b => man.get(b).map(v => bucketPath(v, b).toString))
-        val prev = prevPaths match {
-          case Seq() => None
-          case ps    => Some(spark.read.parquet(ps: _*))
-        }
-        merge(prev, cached)
+        val prevBuckets = touched.toSeq.sorted.flatMap(b => man.get(b).map(b -> _))
+        val prev =
+          if (prevBuckets.isEmpty) None else Some(readBuckets(spark, prevBuckets))
+        val merged = merge(prev, cached)
+        merged
           .withColumn(BucketCol, bucketOf)
           .write.mode("overwrite").partitionBy(BucketCol)
           .parquet(root.resolve(version).toString)
+        writtenSchema = Some(merged.schema)
         val nextMan = man ++ touched.map(_ -> version)
         val tmp = root.resolve(s"_latest.tmp.$batchId")
         Files.writeString(tmp,

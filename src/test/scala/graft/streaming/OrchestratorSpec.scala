@@ -1,6 +1,10 @@
 package graft.streaming
 
+import java.util.concurrent.TimeUnit
+
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import StreamPipelines._
@@ -26,6 +30,15 @@ class OrchestratorSpec extends SparkSpec {
     "fitbit,oops",
     "unknown-topic,1,2,3")
 
+  /** A raw-line feed the test pushes chunks into. */
+  private def memoryFeed(): MemoryStream[String] = {
+    implicit val ctx: org.apache.spark.sql.classic.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
+    implicit val enc: org.apache.spark.sql.Encoder[String] =
+      org.apache.spark.sql.Encoders.STRING
+    MemoryStream[String]
+  }
+
   test("orchestrator fans one feed into all sinks; each sink sees its slice") {
     val loc = new UpsertSink(StreamHarness.tempDir("orch-loc"),
       Seq("user_id"), Seq("ver"))
@@ -37,11 +50,7 @@ class OrchestratorSpec extends SparkSpec {
     val orch = new Orchestrator(loc, prof, sales, historyPath,
       StreamHarness.checkpointDir("orch"), mapDataEnabled = true)
 
-    implicit val ctx: org.apache.spark.sql.classic.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
-    implicit val enc: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
+    val mem = memoryFeed()
     val queries = orch.startAll(mem.toDF())
     try {
       feed.grouped(4).foreach { chunk =>
@@ -92,14 +101,27 @@ class OrchestratorSpec extends SparkSpec {
       Seq("date"), Seq("count"))
     val orch = new Orchestrator(loc, prof, sales,
       StreamHarness.tempDir("orch2-hist"), StreamHarness.checkpointDir("orch2"))
-    implicit val ctx: org.apache.spark.sql.classic.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.classic.SQLContext]
-    implicit val enc: org.apache.spark.sql.Encoder[String] =
-      org.apache.spark.sql.Encoders.STRING
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-    val queries = orch.startAll(mem.toDF())
+    val queries = orch.startAll(memoryFeed().toDF())
     try assert(queries.size == 5)
     finally queries.foreach(_.stop())
+  }
+
+  test("every query startAll returns, mapData included, runs the 100 ms processing-time trigger") {
+    val orch = new Orchestrator(
+      new UpsertSink(StreamHarness.tempDir("orch3-loc"), Seq("user_id"), Seq("ver")),
+      new UpsertSink(StreamHarness.tempDir("orch3-prof"), Seq("user_id"), Seq("ver")),
+      new UpsertSink(StreamHarness.tempDir("orch3-sales"), Seq("date"), Seq("count")),
+      StreamHarness.tempDir("orch3-hist"), StreamHarness.checkpointDir("orch3"),
+      mapDataEnabled = true)
+    val queries = orch.startAll(memoryFeed().toDF())
+    try {
+      assert(Orchestrator.BatchTrigger == Trigger.ProcessingTime(100, TimeUnit.MILLISECONDS))
+      assert(queries.size == 6)
+      queries.foreach { q =>
+        val trigger = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.trigger
+        assert(trigger == Orchestrator.BatchTrigger, s"query ${q.id}")
+      }
+    } finally queries.foreach(_.stop())
   }
 
   test("K6 console/debug sink runs against the stream (reference cassTest.scala:32)") {

@@ -98,4 +98,28 @@ class Scd2SinkSpec extends SparkSpec {
     sink.upsert(b0, 1L) // same rows under a NEW id: equal (seq,v) compress away
     assert(history(sink) == before)
   }
+
+  test("a reopened register upserts and snapshots like one long-lived instance") {
+    // Seqs ascend across batches, so every key's updates arrive in order.
+    val batches = (0 until 4).map { b =>
+      updates((1 to 25).map { i =>
+        val n = b * 25 + i
+        (s"u${n % 6}", n.toLong, n / 7 % 3)
+      }: _*)
+    }
+    val longLived = fresh()
+    batches.zipWithIndex.foreach { case (df, id) => longLived.upsert(df, id.toLong) }
+    // The recovery path: a new instance on a populated register does not
+    // yet know the written schema.
+    val dir = StreamHarness.tempDir("scd2-reopen")
+    def open() = new Scd2Sink(dir, Seq("user_id"), "seq", Seq("v"))
+    val first = open()
+    batches.zipWithIndex.take(2).foreach { case (df, id) => first.upsert(df, id.toLong) }
+    val second = open()
+    batches.zipWithIndex.drop(2).foreach { case (df, id) => second.upsert(df, id.toLong) }
+    Seq(second, open()).foreach { s =>
+      assert(s.snapshot(spark).get.schema == longLived.snapshot(spark).get.schema)
+      assert(history(s) == history(longLived))
+    }
+  }
 }

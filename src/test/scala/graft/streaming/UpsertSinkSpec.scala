@@ -1,7 +1,10 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -13,6 +16,36 @@ class UpsertSinkSpec extends SparkSpec {
   private def newSink(): UpsertSink =
     new UpsertSink(Files.createTempDirectory("upsert-spec-").toString,
       Seq("k"), Seq("ver"))
+
+  /** Spark jobs `body` starts on this thread. Its jobs carry a local
+    * property; a marker job run after it, once its start reaches the
+    * listener, shows that every earlier job start has been delivered by
+    * the asynchronous listener bus. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.jobs"
+    val started = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("body")   => started.incrementAndGet()
+          case Some("marker") => marker.countDown()
+          case _              =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      try body finally sc.setLocalProperty(tag, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "the marker job's start never arrived")
+      started.get
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("upsert keeps the max-version row per key across batches") {
     import spark.implicits._
@@ -126,5 +159,48 @@ class UpsertSinkSpec extends SparkSpec {
     sink.upsert(Seq(("u1", "x", 1L), ("u1", "y", 5L), ("u1", "z", 3L))
       .toDF("k", "v", "ver"), 0)
     assert(sink.snapshot(spark).get.collect().map(_.getString(1)).toSeq == Seq("y"))
+  }
+
+  test("an upsert into existing buckets runs three jobs: discovery, merge shuffle, write") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("upsert-jobs-")
+    val sink = new UpsertSink(dir.toString, Seq("k"), Seq("ver"))
+    val keys = 1 to 200
+    sink.upsert(keys.map(i => (s"u$i", "a", 1L)).toDF("k", "v", "ver"), 0)
+    assert(Files.readAllLines(dir.resolve("_latest")).size == 16, "every bucket exists")
+    // Even keys carry a newer version, odd keys an older one.
+    val batch = keys.map(i => (s"u$i", "b", if (i % 2 == 0) 2L else 0L)).toDF("k", "v", "ver")
+    assert(jobsStartedBy(sink.upsert(batch, 1)) == 3)
+    val got = sink.snapshot(spark).get.collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
+    assert(got == keys.map(i => s"u$i" -> (if (i % 2 == 0) ("b", 2L) else ("a", 1L))).toMap)
+  }
+
+  test("a reopened register upserts and snapshots like one long-lived instance") {
+    import spark.implicits._
+    // Four batches over 23 keys; versions are unique, values include nulls.
+    val batches = (0 until 4).map { b =>
+      (1 to 30).map { i =>
+        val n = b * 30 + i
+        (s"u${n * 7 % 23}", if (n % 5 == 0) None else Some(s"v$n"), n.toLong)
+      }.toDF("k", "v", "ver")
+    }
+    val longLived = newSink()
+    batches.zipWithIndex.foreach { case (df, id) => longLived.upsert(df, id.toLong) }
+    // The recovery path: a new instance on a populated register does not
+    // yet know the written schema. One instance takes batches 0-1, a second
+    // reopens for 2-3, and a third only reads the snapshot.
+    val dir = Files.createTempDirectory("upsert-reopen-").toString
+    def open() = new UpsertSink(dir, Seq("k"), Seq("ver"))
+    val first = open()
+    batches.zipWithIndex.take(2).foreach { case (df, id) => first.upsert(df, id.toLong) }
+    val second = open()
+    batches.zipWithIndex.drop(2).foreach { case (df, id) => second.upsert(df, id.toLong) }
+    val want = longLived.snapshot(spark).get
+    Seq(second, open()).foreach { s =>
+      val got = s.snapshot(spark).get
+      assert(got.schema == want.schema)
+      assert(got.orderBy("k").collect().toSeq == want.orderBy("k").collect().toSeq)
+    }
   }
 }
