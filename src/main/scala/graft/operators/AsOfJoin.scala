@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * side's attributes forward, then keep left rows. ONE shuffle on the key —
   * the naive alternative (range join + per-row max) explodes into a
   * per-key cross product at scale. Left-outer semantics: rows with no
-  * prior right match keep nulls.
+  * prior right match keep nulls. A right row with a null key or a null
+  * time never matches (DuckDB's `ASOF LEFT JOIN`, `AsOfJoinExec`).
   */
 object AsOfJoin {
 
@@ -29,8 +30,8 @@ object AsOfJoin {
     val leftCols = left.columns.filterNot(c => c == key || c == time)
     // side = 0 sorts the right row BEFORE a left row at equal time, so an
     // update at exactly t is visible to an event at t (<= semantics).
-    val taggedRight = right.select(
-      Seq(col(key), col(time), lit(0).as("_side"), col(tiebreak).as("_tb")) ++
+    val taggedRight = right.filter(col(key).isNotNull && col(time).isNotNull)
+      .select(Seq(col(key), col(time), lit(0).as("_side"), col(tiebreak).as("_tb")) ++
         rightCols.map(col) ++ leftCols.map(c => lit(null).as(c)): _*)
     // The left side's tiebreak placeholder must carry the RIGHT side's
     // tiebreak type: a hard-coded long would union-coerce a string tiebreak

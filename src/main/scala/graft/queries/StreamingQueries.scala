@@ -1127,10 +1127,10 @@ object StreamingQueries {
     * discipline (Kimball SCD2) driven by a stream. The tracked value is the
     * event value bucketed to hundreds (floor(value/100)), so runs of equal
     * values exercise change compression; seq = event_id = the log offset.
-    * Scale: per batch, ONE window over (open rows of touched buckets ∪
-    * batch) — closed history is immutable and never recomputed, so a
-    * dimension with years of versions takes updates at stream rate. The
-    * oracle recomputes the same change-compressed history relationally. */
+    * Scale: per batch, ONE window over (open rows ∪ batch); closed history
+    * is immutable and never recomputed, though each batch's write copies
+    * it. The oracle recomputes the same change-compressed history
+    * relationally. */
   val s21Scd2History: GraftQuery = GraftQuery(
     "s21_scd2_history",
     "SCD2 dimension history sink: change-compressed version rows with validity ranges (K1 history variant)",

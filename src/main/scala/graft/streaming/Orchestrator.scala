@@ -40,8 +40,7 @@ final class Orchestrator(
     salesSink: TableSink,
     historyPath: String,
     checkpointRoot: String,
-    mapDataEnabled: Boolean = false,
-    alertThreshold: Double = 0.95) {
+    mapDataEnabled: Boolean = false) {
 
   private val runId = java.util.UUID.randomUUID().toString.replace("-", "")
   // Checkpoints must be unique per query TOO — two orchestrators sharing a
@@ -64,7 +63,7 @@ final class Orchestrator(
   def startAll(raw: DataFrame): Seq[StreamingQuery] = {
     val fitbit = parseFitbit(raw)
 
-    val alerts = warningAlerts(fitbit, threshold = alertThreshold)
+    val alerts = warningAlerts(fitbit)
       .select(col("user_id"), col("warning"), col("machine_ts"))
       .writeStream.format("memory").queryName(alertsTable)
       .option("checkpointLocation", s"$ckpt/alerts")

@@ -17,15 +17,14 @@ import org.apache.spark.sql.functions._
   * changed. This is the standard warehouse dimension-history discipline
   * (Kimball SCD2) driven by a stream.
   *
-  * Merge per micro-batch (storage/idempotence from [[BucketedSnapshotSink]]):
+  * Merge per micro-batch (storage/idempotence from [[SnapshotSink]]):
   * CLOSED versions pass through untouched — history is immutable. Each
   * key's OPEN version re-enters the change-point computation as a synthetic
   * update at its own `valid_from`, unioned with the batch's updates;
   * change points (value ≠ previous value per key, seq-ordered) become the
   * new version rows, `valid_to` = the next change's seq. Per-batch work is
-  * one window over (open rows of touched buckets ∪ batch) — closed-history
-  * size never enters the computation, which is what lets a dimension with
-  * years of history take updates at stream rate.
+  * one window over (open rows ∪ batch); closed rows never enter the
+  * change-point computation, though the register's write copies them.
   *
   * Ordering contract: updates must arrive in non-decreasing `seqCol` order
   * per key ACROSS batches (the per-key-ordered log every CDC transport
@@ -39,8 +38,8 @@ import org.apache.spark.sql.functions._
   * SCD2.
   */
 final class Scd2Sink(path: String, keyCols: Seq[String], seqCol: String,
-                     valueCols: Seq[String], nBuckets: Int = 16)
-    extends BucketedSnapshotSink(path, keyCols, nBuckets) {
+                     valueCols: Seq[String])
+    extends SnapshotSink(path) {
 
   private val ValidFrom = "valid_from"
   private val ValidTo = "valid_to"

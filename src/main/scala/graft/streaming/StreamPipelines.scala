@@ -29,15 +29,14 @@ object StreamPipelines {
     * round pulse half-up, classify against the piecewise max-pulse limit,
     * keep only actionable alerts. */
   def warningAlerts(parsed: DataFrame,
-                    criticalCats: Seq[String] = EventCriticalCats,
-                    threshold: Double = 0.95): DataFrame =
+                    criticalCats: Seq[String] = EventCriticalCats): DataFrame =
     parsed
       .select(col("user_id"), col("age"),
         HealthFunctions.roundHalfUp(col("pulse")).as("pulse"),
         col("bp_cat"), col("machine_ts"), col("ts_str"))
       .withColumn("warning",
         HealthFunctions.warning(col("pulse"), col("age"), col("bp_cat"),
-          threshold = threshold, criticalCats = criticalCats))
+          criticalCats = criticalCats))
       .filter(col("warning") =!= "no-use")
 
   /** K5's exact output rendering (reference `IOTSparkStreaming.scala:107,140`):

@@ -6,9 +6,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Cassandra PK-overwrite tables do (`IOTSparkStreaming.scala:68-69,76,166`),
   * abstracted to the two operations every adapter must provide. The
   * [[Orchestrator]] and the registered streaming queries are typed against
-  * this trait; the bundled implementation is the bucketed parquet
-  * [[UpsertSink]], and a production Cassandra/JDBC/Delta adapter drops in by
-  * implementing the same contract:
+  * this trait; the bundled implementation is the parquet [[UpsertSink]]
+  * (on [[SnapshotSink]]), and a production Cassandra/JDBC/Delta adapter
+  * drops in by implementing the same contract:
   *
   *  - `upsert` MUST be idempotent per `batchId` (foreachBatch redelivers
   *    batches on recovery — at-least-once in, exactly-once effect out);

@@ -9,25 +9,23 @@ import org.apache.spark.sql.functions._
   * K2 `sales`, K3 `latest_location`; reference
   * `IOTSparkStreaming.scala:68-69,76,166`), designed for `foreachBatch`.
   *
-  * Storage, idempotence, and GC live in [[BucketedSnapshotSink]]; this
-  * class supplies the register discipline: **last-write-wins by version,
-  * not by arrival**. The caller names a set of ordering columns; the
-  * surviving row per key is the max by that ordering across the bucket's
-  * snapshot and the incoming batch. The result is independent of
-  * micro-batch boundaries AND of replay — reprocessing a batch after
-  * checkpoint recovery converges to the same snapshot (the reference is
-  * only at-least-once, SURVEY.md §2.7; this is effectively exactly-once).
+  * Storage, idempotence, and GC live in [[SnapshotSink]]; this class
+  * supplies the register discipline: **last-write-wins by version, not by
+  * arrival**. The caller names a set of ordering columns; the surviving row
+  * per key is the max by that ordering across the snapshot and the
+  * incoming batch. The result is independent of micro-batch boundaries
+  * AND of replay — reprocessing a batch after checkpoint recovery
+  * converges to the same snapshot (the reference is only at-least-once,
+  * SURVEY.md §2.7; this is effectively exactly-once).
   *
-  * Scale: the merge shuffles (touched buckets ∪ batch) once on the upsert
-  * key; the touched-bucket set itself is metadata (≤ nBuckets ints). On a
-  * real cluster `nBuckets` is sized so one bucket's keys fit an executor
-  * comfortably (e.g. total keys / ~10M).
+  * Scale: an upsert is two Spark jobs, the merge's one shuffle of
+  * (snapshot ∪ batch) on the upsert key and the write of the whole
+  * register, so it costs O(register + batch) per batch.
   */
-final class UpsertSink(path: String, keyCols: Seq[String], orderCols: Seq[String],
-                       nBuckets: Int = 16)
-    extends BucketedSnapshotSink(path, keyCols, nBuckets) {
+final class UpsertSink(path: String, keyCols: Seq[String], orderCols: Seq[String])
+    extends SnapshotSink(path) {
 
-  /** Dedupe to max-by-ordering per key across (bucket snapshot ∪ batch). */
+  /** Dedupe to max-by-ordering per key across (snapshot ∪ batch). */
   override protected def merge(prev: Option[DataFrame], batch: DataFrame): DataFrame = {
     val merged = prev.map(_.unionByName(batch)).getOrElse(batch)
     val w = Window.partitionBy(keyCols.map(col): _*)

@@ -3,7 +3,7 @@ package graft.operators
 import graft.SparkSpec
 
 /** As-of join edge semantics: <=-inclusivity, no-prior-match nulls,
-  * latest-wins among multiple candidates. */
+  * latest-wins among multiple candidates, null right keys and times. */
 class AsOfJoinSpec extends SparkSpec {
 
   test("each left row gets the latest right row at or before its time") {
@@ -48,5 +48,23 @@ class AsOfJoinSpec extends SparkSpec {
       .collect().map(r => (r.getString(r.fieldIndex("pid")),
         r.getDouble(r.fieldIndex("pv")))).toSeq
     assert(got == Seq(("b", 1.0)))
+  }
+
+  test("null keys and null times on the right never match") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val cSchema = StructType(Seq(StructField("k", StringType), StructField("t", LongType),
+      StructField("cid", StringType)))
+    val pSchema = StructType(Seq(StructField("k", StringType), StructField("t", LongType),
+      StructField("pid", LongType), StructField("pv", DoubleType)))
+    val clicks = spark.createDataFrame(
+      java.util.Arrays.asList(Row("u1", 10L, "c1"), Row(null, 10L, "c2")), cSchema)
+    val purchases = spark.createDataFrame(
+      java.util.Arrays.asList(Row(null, 5L, 1L, 1.0), Row("u1", null, 2L, 2.0)), pSchema)
+    val got = AsOfJoin(clicks, purchases, "k", "t",
+      rightCols = Seq("pid", "pv"), tiebreak = "pid")
+      .select("cid", "pid").orderBy("cid").collect()
+      .map(r => (r.getString(0), Option(r.get(1)))).toSeq
+    assert(got == Seq(("c1", None), ("c2", None)))
   }
 }

@@ -99,6 +99,15 @@ class Scd2SinkSpec extends SparkSpec {
     assert(history(sink) == before)
   }
 
+  test("an empty batch leaves the rows unchanged and is marked applied") {
+    val sink = fresh()
+    sink.upsert(updates(("u1", 1L, 10), ("u1", 5L, 20), ("u2", 3L, 7)), 0L)
+    val before = history(sink)
+    sink.upsert(updates(), 1L)
+    assert(sink.alreadyApplied(1L))
+    assert(history(sink) == before)
+  }
+
   test("a reopened register upserts and snapshots like one long-lived instance") {
     // Seqs ascend across batches, so every key's updates arrive in order.
     val batches = (0 until 4).map { b =>

@@ -107,50 +107,19 @@ class UpsertSinkSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("version dirs no bucket references anymore are garbage-collected") {
+  test("every version but the live one is garbage-collected") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("upsert-gc-")
-    // ONE bucket: every batch rewrites it, so each new version fully
-    // supersedes the previous one and the old dir must be deleted.
-    val sink = new UpsertSink(dir.toString, Seq("k"), Seq("ver"), nBuckets = 1)
+    val dir = Files.createTempDirectory("upsert-gc-")
+    val sink = new UpsertSink(dir.toString, Seq("k"), Seq("ver"))
+    // A stray version, as a crash between a pointer swap and its GC leaves.
+    Files.createDirectories(dir.resolve("v99"))
     (0 to 4).foreach { i =>
       sink.upsert(Seq((s"u$i", "x", i.toLong)).toDF("k", "v", "ver"), i.toLong)
+      val versions = dir.toFile.listFiles().map(_.getName).filter(_.startsWith("v")).toSeq
+      assert(versions == Seq(s"v$i"), versions.mkString(","))
+      assert(Files.readString(dir.resolve("_latest")) == s"v$i")
     }
-    val versions = dir.toFile.listFiles().map(_.getName).filter(_.startsWith("v")).sorted
-    assert(versions.toSeq == Seq("v4"), versions.mkString(","))
     assert(sink.snapshot(spark).get.count() == 5)
-  }
-
-  test("a batch rewrites ONLY the buckets its keys touch (untouched files byte-identical)") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("upsert-prune-")
-    val sink = new UpsertSink(dir.toString, Seq("k"), Seq("ver"), nBuckets = 8)
-    // Batch 0 spreads 64 keys over (almost surely) all 8 buckets.
-    sink.upsert((1 to 64).map(i => (s"u$i", "a", 1L)).toDF("k", "v", "ver"), 0)
-    // Record every data file under v0 with size + mtime.
-    def filesUnder(v: String): Map[String, (Long, java.nio.file.attribute.FileTime)] = {
-      import scala.jdk.CollectionConverters._
-      val s = java.nio.file.Files.walk(dir.resolve(v))
-      try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
-        .map(p => (dir.relativize(p).toString,
-          (java.nio.file.Files.size(p), java.nio.file.Files.getLastModifiedTime(p))))
-        .toMap
-      finally s.close()
-    }
-    val before = filesUnder("v0")
-    // Batch 1 touches a single key, hence a single bucket.
-    sink.upsert(Seq(("u1", "b", 2L)).toDF("k", "v", "ver"), 1)
-    val after = filesUnder("v0")
-    // u1's bucket moved to v1; every v0 bucket dir that survived must be
-    // byte-identical (same files, sizes, mtimes) — never rewritten.
-    assert(after.nonEmpty)
-    after.foreach { case (p, meta) => assert(before(p) == meta, p) }
-    assert(before.size > after.size) // exactly the touched bucket left v0
-    // And the merged snapshot is still last-write-wins correct.
-    val got = sink.snapshot(spark).get.filter($"k" === "u1")
-      .collect().map(_.getString(1)).toSeq
-    assert(got == Seq("b"))
-    assert(sink.snapshot(spark).get.count() == 64)
   }
 
   test("within-batch duplicates on the key dedupe to the max version") {
@@ -161,19 +130,27 @@ class UpsertSinkSpec extends SparkSpec {
     assert(sink.snapshot(spark).get.collect().map(_.getString(1)).toSeq == Seq("y"))
   }
 
-  test("an upsert into existing buckets runs three jobs: discovery, merge shuffle, write") {
+  test("an upsert into a populated register runs two jobs: merge shuffle, write") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("upsert-jobs-")
-    val sink = new UpsertSink(dir.toString, Seq("k"), Seq("ver"))
+    val sink = newSink()
     val keys = 1 to 200
     sink.upsert(keys.map(i => (s"u$i", "a", 1L)).toDF("k", "v", "ver"), 0)
-    assert(Files.readAllLines(dir.resolve("_latest")).size == 16, "every bucket exists")
     // Even keys carry a newer version, odd keys an older one.
     val batch = keys.map(i => (s"u$i", "b", if (i % 2 == 0) 2L else 0L)).toDF("k", "v", "ver")
-    assert(jobsStartedBy(sink.upsert(batch, 1)) == 3)
+    assert(jobsStartedBy(sink.upsert(batch, 1)) == 2)
     val got = sink.snapshot(spark).get.collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(got == keys.map(i => s"u$i" -> (if (i % 2 == 0) ("b", 2L) else ("a", 1L))).toMap)
+  }
+
+  test("an empty batch leaves the rows unchanged and is marked applied") {
+    import spark.implicits._
+    val sink = newSink()
+    sink.upsert(Seq(("u1", "a", 1L), ("u2", "b", 2L)).toDF("k", "v", "ver"), 0)
+    val before = sink.snapshot(spark).get.orderBy("k").collect().toSeq
+    sink.upsert(Seq.empty[(String, String, Long)].toDF("k", "v", "ver"), 1)
+    assert(sink.alreadyApplied(1))
+    assert(sink.snapshot(spark).get.orderBy("k").collect().toSeq == before)
   }
 
   test("a reopened register upserts and snapshots like one long-lived instance") {
