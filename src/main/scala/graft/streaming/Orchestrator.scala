@@ -2,11 +2,13 @@ package graft.streaming
 
 import java.util.concurrent.TimeUnit
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import Orchestrator.BatchTrigger
+import Orchestrator.{BatchTrigger, CheckpointManagerKey}
 import StreamPipelines._
 
 /** The engine's `main()` equivalent of the reference driver
@@ -33,6 +35,31 @@ import StreamPipelines._
   * source `latestOffset`; on this trigger it uses 0.29 and 0.61. A new
   * chunk waits at most 100 ms for its trigger, against result latency
   * p50s of about 1.3 s in the repo benchmark's steady workload.
+  *
+  * Checkpoints: each trigger of each query writes three checkpoint files
+  * (its file source's `sources/0` log entry, the offset WAL and the commit
+  * log; the history sink adds its `_spark_metadata` entries). Without the
+  * native `libhadoop`, Hadoop's local filesystem shells out: creating a
+  * file and its `.crc` runs two `chmod`s, and Spark's default manager
+  * renames through `FileContext`, whose link checks run eight `readlink`s
+  * more. That is ten process spawns per checkpoint file, 1,500 of the
+  * 2,000 a repo benchmark steady run started (JFR, 4 vCPUs). `startAll`
+  * therefore sets `spark.sql.streaming.checkpointFileManagerClass` to
+  * Spark's `FileSystemBasedCheckpointFileManager` on the session it runs
+  * in, unless that session already names a manager. The setting is
+  * session-wide, because Spark reads it from the session as each query
+  * starts, so queries started later in the same session use it too. That
+  * manager renames with `FileSystem.rename`, one `rename(2)` and no
+  * `readlink`; it is atomic on a local disk, the condition Spark states
+  * for it. It keeps the checksummed on-disk format, so older checkpoints
+  * stay readable, and with it the two `chmod`s per file.
+  *
+  * Restarts: each instance checkpoints under a fresh run id, so it cannot
+  * resume another instance's run. A second instance on the same
+  * checkpoint root and sink paths would restart batch ids at 0, and the
+  * registers' batch markers and the history sink's `_spark_metadata` would
+  * then drop its first batch as already applied, without an error.
+  * `startAll` therefore refuses a checkpoint root that holds another run.
   */
 final class Orchestrator(
     locationSink: TableSink,
@@ -43,8 +70,7 @@ final class Orchestrator(
     mapDataEnabled: Boolean = false) {
 
   private val runId = java.util.UUID.randomUUID().toString.replace("-", "")
-  // Checkpoints must be unique per query TOO — two orchestrators sharing a
-  // checkpointRoot would otherwise corrupt each other's offset logs.
+  // One run per checkpoint root: startAll refuses a root holding another.
   private val ckpt = s"$checkpointRoot/$runId"
   /** Memory-sink table holding the alert stream's output (unique per
     * orchestrator instance, so concurrent orchestrators never collide). */
@@ -59,8 +85,22 @@ final class Orchestrator(
     startAll(source.open(spark))
 
   /** Start every pipeline on the raw-line stream; returns the running
-    * queries (callers drain with `processAllAvailable`/`stop`). */
+    * queries (callers drain with `processAllAvailable`/`stop`). Throws
+    * `IllegalStateException` if `checkpointRoot` holds another run, and
+    * sets the session's checkpoint manager if it names none (see the class
+    * doc). */
   def startAll(raw: DataFrame): Seq[StreamingQuery] = {
+    val root = new Path(checkpointRoot)
+    val fs = root.getFileSystem(raw.sparkSession.sparkContext.hadoopConfiguration)
+    val others = (if (fs.exists(root)) fs.listStatus(root).toSeq else Nil)
+      .map(_.getPath.getName).filterNot(_ == runId)
+    if (others.nonEmpty) throw new IllegalStateException(
+      s"checkpoint root $checkpointRoot already holds run(s) ${others.mkString(", ")}; " +
+        "an Orchestrator cannot resume another run, and its first batches would be " +
+        "dropped as already applied: use fresh sink and checkpoint paths")
+    val conf = raw.sparkSession.conf
+    if (conf.getOption(CheckpointManagerKey).isEmpty)
+      conf.set(CheckpointManagerKey, classOf[FileSystemBasedCheckpointFileManager].getName)
     val fitbit = parseFitbit(raw)
 
     val alerts = warningAlerts(fitbit)
@@ -110,4 +150,6 @@ final class Orchestrator(
 object Orchestrator {
   /** The one trigger of every query [[Orchestrator.startAll]] starts. */
   val BatchTrigger: Trigger = Trigger.ProcessingTime(100, TimeUnit.MILLISECONDS)
+
+  private val CheckpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
 }

@@ -9,6 +9,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = super.afterAll()
+
+  /** Run `body` with the session conf `key` set to `value` (unset on None),
+    * then restore what the session held before: every spec shares one
+    * session. */
+  def withConf[T](key: String, value: Option[String])(body: => T): T = {
+    val conf = spark.conf
+    def put(v: Option[String]): Unit = v.fold(conf.unset(key))(conf.set(key, _))
+    val before = conf.getOption(key)
+    put(value)
+    try body finally put(before)
+  }
 }
 
 object SparkSpec {

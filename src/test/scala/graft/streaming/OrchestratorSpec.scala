@@ -1,10 +1,14 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.TimeUnit
 
+import org.apache.spark.sql.execution.streaming.checkpointing.{FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import org.scalatest.Outcome
 
 import graft.SparkSpec
 import StreamPipelines._
@@ -29,6 +33,13 @@ class OrchestratorSpec extends SparkSpec {
     // garbage must not kill any pipeline
     "fitbit,oops",
     "unknown-topic,1,2,3")
+
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  // startAll sets the checkpoint manager on the session, which every spec
+  // shares: each case here puts back what the session held before it.
+  override def withFixture(test: NoArgTest): Outcome =
+    withConf(ManagerKey, spark.conf.getOption(ManagerKey))(super.withFixture(test))
 
   /** A raw-line feed the test pushes chunks into. */
   private def memoryFeed(): MemoryStream[String] = {
@@ -122,6 +133,63 @@ class OrchestratorSpec extends SparkSpec {
         assert(trigger == Orchestrator.BatchTrigger, s"query ${q.id}")
       }
     } finally queries.foreach(_.stop())
+  }
+
+  /** Fresh location, profile and sales register dirs and a history dir. */
+  private def sinkDirs(tag: String): Seq[String] =
+    Seq("loc", "prof", "sales", "hist").map(t => StreamHarness.tempDir(s"$tag-$t"))
+
+  /** An Orchestrator over `sinkDirs`-shaped paths and a checkpoint root. */
+  private def orchestrator(dirs: Seq[String], root: String): Orchestrator =
+    new Orchestrator(
+      new UpsertSink(dirs(0), Seq("user_id"), Seq("ver")),
+      new UpsertSink(dirs(1), Seq("user_id"), Seq("ver")),
+      new UpsertSink(dirs(2), Seq("date"), Seq("count")),
+      dirs(3), root)
+
+  test("startAll sets the FileSystem checkpoint manager on its session unless one is named") {
+    def startAndStop(tag: String): Unit =
+      orchestrator(sinkDirs(tag), StreamHarness.checkpointDir(tag))
+        .startAll(memoryFeed().toDF()).foreach(_.stop())
+    withConf(ManagerKey, None) {
+      startAndStop("orch4")
+      assert(spark.conf.get(ManagerKey) == classOf[FileSystemBasedCheckpointFileManager].getName)
+    }
+    val named = classOf[FileContextBasedCheckpointFileManager].getName
+    withConf(ManagerKey, Some(named)) {
+      startAndStop("orch5")
+      assert(spark.conf.get(ManagerKey) == named)
+    }
+  }
+
+  /** A drains f1 and stops, f2 lands, and B starts with A's arguments, as a
+    * restarted deployment would: B must throw and start no query. */
+  private def secondRunRefused(tag: String, root: String): Unit = {
+    val watch = StreamHarness.tempDir(s"$tag-watch")
+    val dirs = sinkDirs(tag)
+    def land(file: String, line: String): Unit =
+      Files.writeString(Paths.get(watch, file), line + "\n")
+
+    land("f1", "fitbit,2024-01-01 10:00:00,u1,10,20,70.0,36.6,30,NORMAL,1000")
+    val first = orchestrator(dirs, root).startAll(spark, new FileStreamSource(watch))
+    try first.foreach(_.processAllAvailable()) finally first.foreach(_.stop())
+    land("f2", "fitbit,2024-01-01 10:00:05,u2,11,21,70.0,36.6,30,NORMAL,1005")
+
+    val active = spark.streams.active.length
+    val e = intercept[IllegalStateException] {
+      orchestrator(dirs, root).startAll(spark, new FileStreamSource(watch))
+    }
+    assert(e.getMessage.contains(root), e.getMessage)
+    assert(e.getMessage.contains("use fresh sink and checkpoint paths"), e.getMessage)
+    assert(spark.streams.active.length == active)
+  }
+
+  test("a second Orchestrator on a used checkpoint root refuses to start, not drop data") {
+    secondRunRefused("orch6", StreamHarness.checkpointDir("orch6"))
+  }
+
+  test("a used checkpoint root given as a file: URI is refused too") {
+    secondRunRefused("orch7", "file:" + StreamHarness.checkpointDir("orch7"))
   }
 
   test("K6 console/debug sink runs against the stream (reference cassTest.scala:32)") {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
@@ -21,11 +22,13 @@ class RecoverySpec extends SparkSpec {
     org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
   }
 
-  test("restart from checkpoint resumes offsets; registers stay correct") {
+  /** Stop a location pipeline after one batch, restart it on the same
+    * checkpoint, feed more, and check the register. */
+  private def restartResumes(tag: String): Unit = {
     val mem = memStream
-    val sink = new UpsertSink(StreamHarness.tempDir("recover-loc"),
+    val sink = new UpsertSink(StreamHarness.tempDir(s"$tag-loc"),
       Seq("user_id"), Seq("ver"))
-    val ckpt = StreamHarness.checkpointDir("recover")
+    val ckpt = StreamHarness.checkpointDir(tag)
     def start() = locations(parseFitbit(mem.toDF()))
       .writeStream
       .option("checkpointLocation", ckpt)
@@ -50,6 +53,19 @@ class RecoverySpec extends SparkSpec {
     val got = sink.snapshot(spark).get.orderBy("user_id")
       .collect().map(r => (r.getAs[String]("user_id"), r.getAs[String]("lat"))).toSeq
     assert(got == Seq(("u1", "11"), ("u2", "12")))
+  }
+
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  test("restart from checkpoint resumes offsets; registers stay correct") {
+    // Spark's default FileContext manager, whatever an earlier suite set.
+    withConf(ManagerKey, None)(restartResumes("recover"))
+  }
+
+  test("restart resumes under the FileSystem checkpoint manager the Orchestrator sets") {
+    withConf(ManagerKey, Some(classOf[FileSystemBasedCheckpointFileManager].getName)) {
+      restartResumes("recover-fs")
+    }
   }
 
   test("topic sink: a replayed epoch (lost commit log) writes no duplicate parts") {

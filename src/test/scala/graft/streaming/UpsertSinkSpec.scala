@@ -130,14 +130,32 @@ class UpsertSinkSpec extends SparkSpec {
     assert(sink.snapshot(spark).get.collect().map(_.getString(1)).toSeq == Seq("y"))
   }
 
-  test("an upsert into a populated register runs two jobs: merge shuffle, write") {
+  test("an upsert into a populated register runs one job and writes one part file") {
     import spark.implicits._
-    val sink = newSink()
+    val dir = Files.createTempDirectory("upsert-jobs-")
+    val sink = new UpsertSink(dir.toString, Seq("k"), Seq("ver"))
     val keys = 1 to 200
     sink.upsert(keys.map(i => (s"u$i", "a", 1L)).toDF("k", "v", "ver"), 0)
     // Even keys carry a newer version, odd keys an older one.
     val batch = keys.map(i => (s"u$i", "b", if (i % 2 == 0) 2L else 0L)).toDF("k", "v", "ver")
-    assert(jobsStartedBy(sink.upsert(batch, 1)) == 2)
+    assert(jobsStartedBy(sink.upsert(batch, 1)) == 1)
+    val live = dir.resolve(Files.readString(dir.resolve("_latest")))
+    val parts = live.toFile.list().filter(_.startsWith("part-"))
+    assert(parts.length == 1, parts.mkString(","))
+    val got = sink.snapshot(spark).get.collect()
+      .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
+    assert(got == keys.map(i => s"u$i" -> (if (i % 2 == 0) ("b", 2L) else ("a", 1L))).toMap)
+  }
+
+  test("a merge input above the broadcast threshold keeps the shuffle: two jobs") {
+    import spark.implicits._
+    val sink = newSink()
+    val keys = 1 to 200
+    sink.upsert(keys.map(i => (s"u$i", "a", 1L)).toDF("k", "v", "ver"), 0)
+    val batch = keys.map(i => (s"u$i", "b", if (i % 2 == 0) 2L else 0L)).toDF("k", "v", "ver")
+    withConf("spark.sql.autoBroadcastJoinThreshold", Some("-1")) {
+      assert(jobsStartedBy(sink.upsert(batch, 1)) == 2)
+    }
     val got = sink.snapshot(spark).get.collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(got == keys.map(i => s"u$i" -> (if (i % 2 == 0) ("b", 2L) else ("a", 1L))).toMap)
